@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * These are interpreted (CodegenFallback) by design: parsing a
   * variable-length binary format row-by-row dominates any codegen win,
   * and keeping them out of hot aggregate paths is documented in
-  * SURVEY.md §4. The journal scan path (LwesPartitionReader) never goes
+  * SURVEY.md §4. The journal scan path (LwesColumnarBatchReader) never goes
   * through these.
   */
 object LwesExpressions {

@@ -1415,10 +1415,10 @@ object LwesQueries {
     // 240-301), so journals from modern emitters are unreadable there.
     // Arrays are constructed deterministically from `orders` scalars,
     // ride the wire as real array tokens inside a split-zstd journal,
-    // and come back through the row reader (array schemas bypass the
-    // vectorized path by design); the oracle replays the same
-    // arithmetic scalar-wise on the source parquet, so a mis-encoded
-    // count, element value, or element ORDER hash-mismatches.
+    // and come back through the columnar scan's array fill; the oracle
+    // replays the same arithmetic scalar-wise on the source parquet, so
+    // a mis-encoded count, element value, or element ORDER
+    // hash-mismatches.
     "lwes_array_types" -> ((
       (s: SparkSession, d: String) => {
         val dir = cached(s"arrt|$d") { dir =>
@@ -2855,8 +2855,7 @@ object LwesQueries {
     // unset on the wire; retries/score/flagged/dims/tags have no
     // column at all); the read declares the template, so every missing
     // attribute must materialize its declared default — scalar and
-    // array, through both reader paths (this key rides the default
-    // vectorized scan; EsfSpec pins row-path parity). The oracle
+    // array (EsfSpec pins the scalar and array fills). The oracle
     // replays the exact fill from orders.
     "lwes_esf_defaults" -> ((
       (s: SparkSession, d: String) => {

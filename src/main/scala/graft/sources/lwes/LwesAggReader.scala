@@ -52,11 +52,12 @@ class LwesAggReaderFactory(config: LwesReadConfig, spec: LwesAggSpec,
   *     records' receipt column is NULL, which min/max ignore).
   *   - **Stream**: everything else (sidecar-less gzip journals,
   *     torn/footerless `.zsj`, event-name-filtered or time-windowed
-  *     scans, float/string attribute bounds) drains a plain
-  *     [[LwesPartitionReader]] projected to just the aggregated columns
-  *     and folds rows into accumulators — identical admission semantics
-  *     to an unpushed scan (torn-tail tolerance, resync, ESF defaults),
-  *     so pushdown can never change a result, only where the fold runs.
+  *     scans, float/string attribute bounds) drains the same
+  *     [[LwesColumnarBatchReader]] an unpushed scan runs, projected to
+  *     just the aggregated columns, and folds its rows into accumulators
+  *     — identical admission semantics (torn-tail tolerance, resync, ESF
+  *     defaults), so pushdown can never change a result, only where the
+  *     fold runs.
   *
   * MIN/MAX comparisons replicate Spark's total order per type (NaN
   * greatest via `java.lang.Double.compare`, unsigned byte-wise UTF8
@@ -177,14 +178,21 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
   private var emit: Iterator[InternalRow] = _
   private var row: InternalRow = _
 
+  // `own` is applied to every retained value: the stream fold reads
+  // strings straight out of the batch reader's vectors, which the next
+  // batch overwrites
   private def mergeMin(acc: Acc, i: Int, v: Any): Unit =
     if (v != null && (acc.values(i) == null ||
         comparators(i)(v, acc.values(i)) < 0))
-      acc.values(i) = v
+      acc.values(i) = own(v)
   private def mergeMax(acc: Acc, i: Int, v: Any): Unit =
     if (v != null && (acc.values(i) == null ||
         comparators(i)(v, acc.values(i)) > 0))
-      acc.values(i) = v
+      acc.values(i) = own(v)
+  private def own(v: Any): Any = v match {
+    case s: UTF8String => s.copy()
+    case other => other
+  }
 
   // A27 sidecar answering is sound only when the whole file is
   // admitted as-is: no record-level gate may drop or reshape records
@@ -479,23 +487,25 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
   }
 
   private def streamFile(slice: LwesInputPartition): Unit = {
-    val r = new LwesPartitionReader(slice, config, conf)
+    val r = new LwesColumnarBatchReader(Seq(slice), config, conf)
     // per-file fast path: when every group column is a partition
     // column, the file's group key is one constant resolved on the
-    // first record — no per-record key building (the row reader
-    // materializes fresh values per record, so the per-record keys a
-    // name-col grouping builds below are safe to retain)
+    // first record — no per-record key building. A name-col grouping
+    // builds a key per record over the reused vectors, so a NEW group
+    // stores a copy of its key
     var lazyAcc: Acc = if (g == 0) accFor(Nil) else null
     try {
-      while (r.next()) {
-        val rec = r.get()
+      while (r.next()) r.get().rowIterator().forEachRemaining { rec =>
         val acc: Acc =
           if (g == 0) lazyAcc
           else if (metadataGroupable) {
             if (lazyAcc == null) lazyAcc = accFor(sliceKey(slice))
             lazyAcc
-          } else accFor(groupIdx.iterator.map(ix =>
-            if (rec.isNullAt(ix)) null else rec.getUTF8String(ix)).toList)
+          } else {
+            val key = groupIdx.iterator.map(ix =>
+              if (rec.isNullAt(ix)) null else rec.getUTF8String(ix)).toList
+            groups.getOrElse(key, accFor(key.map(own)))
+          }
         var i = 0
         while (i < n) {
           funcs(i) match {

@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized scan output: journal WIRE BYTES are decoded straight into
-  * `ColumnarBatch` column vectors (4096 rows per batch) — no per-event
-  * object, no per-attribute boxing, no String keys. The record loop:
+/** The one scan decoder behind `format("lwes")` — batch scans,
+  * streaming micro-batches and the pushed-aggregate stream fold:
+  * journal WIRE BYTES are decoded straight into `ColumnarBatch` column
+  * vectors (4096 rows per batch) — no per-event object, no
+  * per-attribute boxing, no String keys. The record loop:
   *
   *   - reads the 22-byte header + payload into two reused buffers;
   *   - applies the eventName filter by comparing raw name bytes;
@@ -22,29 +24,32 @@ import org.apache.spark.unsafe.types.UTF8String
   *     decoded by wire token directly into the per-column typed writer;
   *   - injects header-derived columns (ReceiptTime/SenderIP/SenderPort/
   *     SiteID) from the header fields, overwriting payload copies — the
-  *     same replace semantics as the row path's `ev.set`;
+  *     same replace semantics as the event object's `ev.set`;
   *   - null-fills columns no attribute reached (per-row stamp array, no
   *     per-row clearing).
   *
-  * Every conversion matches [[LwesOptions.toCatalyst]] bit-for-bit (the
-  * parity contract pinned by LwesColumnarSpec): float-from-string,
-  * uint64-as-decimal, IPADDR un-reversal, unconvertible → NULL, and
-  * malformed-UTF-8 string attrs take the same String round-trip the row
-  * path takes (ASCII fast-paths straight from the wire).
+  * Every conversion matches [[LwesOptions.toCatalyst]] bit-for-bit:
+  * float-from-string, uint64-as-decimal, IPADDR un-reversal,
+  * unconvertible → NULL, and malformed-UTF-8 string attrs take the same
+  * String round-trip the event-object decode takes (ASCII fast-paths
+  * straight from the wire). The event-object decode (JournalReader →
+  * LwesEvent → toCatalyst) is the reference: the test tree's
+  * `ColumnShape` shapes rows from it, and LwesColumnarSpec pins this
+  * reader against it.
   *
-  * Corruption semantics are the row path's exactly: torn tail / codec
+  * Corruption semantics are JournalReader's: torn tail / codec
   * corruption ends the FILE (tornFiles metric), an undecodable payload
   * costs one RECORD and resyncs at the next frame (corruptRecords
   * metric; partially-written rows are rolled back by not advancing the
   * row index and clearing its null bits). SequenceFile containers —
-  * detected by magic, rare, already object-shaped — fall back to the
-  * shared [[ColumnShape]] fill per file.
+  * detected by magic — go through the same payload walk.
   *
   * At 100 TB, scan CPU is the dominant cost and this is the hot loop:
-  * the row path pays ~6 allocations per attribute (key byte[], key
-  * String, boxed value, LwesAttr, ArrayBuffer growth, Option) before
-  * shaping even starts; this path pays zero for skipped attributes and
-  * at most one (the vector's own append) for projected ones.
+  * the event-object decode pays ~6 allocations per attribute (key
+  * byte[], key String, boxed value, LwesAttr, ArrayBuffer growth,
+  * Option) before shaping even starts; this path pays zero for skipped
+  * attributes and at most one (the vector's own append) for projected
+  * ones.
   */
 class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
     config: LwesReadConfig, conf: Configuration)
@@ -85,7 +90,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
   }
 
   // header-derived columns: (column, header field), written after the
-  // payload scan so they REPLACE payload copies (row-path `set` parity)
+  // payload scan so they REPLACE payload copies (LwesEvent `set` parity)
   private val HReceipt = 0; private val HIp = 1
   private val HPort = 2; private val HSite = 3
   private val headerWrites: Array[(Int, Int)] =
@@ -115,11 +120,11 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
   private val groupNameStrs: Array[String] = schema.fieldNames
     .flatMap(config.eventFor.get).filter(_.nonEmpty).distinct
 
-  /** Row-path parity for event-name matching: the row path compares
-    * UTF-8-DECODED strings (JournalReader nameFilter / ColumnShape
-    * requiredEvent), so a wire name with invalid UTF-8 bytes can decode
-    * (via replacement chars) equal to an accepted name even though the
-    * raw bytes differ. Fast path stays the byte compare; only when it
+  /** Event-name matching as the event-object decode does it: that
+    * decode compares UTF-8-DECODED strings (JournalReader nameFilter,
+    * per-column required event), so a wire name with invalid UTF-8
+    * bytes can decode (via replacement chars) equal to an accepted name
+    * even though the raw bytes differ. Fast path stays the byte compare; only when it
     * misses AND the wire bytes are not pure ASCII (corrupt input — the
     * same deferral rule StrEqEarly uses for pushed string predicates)
     * do we fall back to the decoded-String compare. */
@@ -140,7 +145,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
   }
 
   /** Charset-parity write: ASCII goes straight from the wire (the
-    * charsets agree there); anything else takes the row path's String
+    * charsets agree there); anything else takes toCatalyst's String
     * round-trip in `cs` so malformed sequences produce identical
     * replacement bytes (UTF-8) / Latin-1 transcodes to UTF-8. */
   private def putDecoded(vec: OnHeapColumnVector, r: Int,
@@ -183,7 +188,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
 
   /** Modern lwes tokens (float/double scalars, array tokens) carry
     * values the long-decoding fast paths can't represent; route them
-    * through the ROW PATH's own decode + conversion
+    * through the event-object decode + conversion
     * ([[graft.lwes.LwesCodec.readValue]] → [[LwesOptions.toCatalyst]])
     * so parity holds by construction. These tokens never appear in
     * classic journals, so the fast paths stay allocation-free. */
@@ -222,8 +227,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
         val at = dt.asInstanceOf[org.apache.spark.sql.types.ArrayType]
         val child = vec.arrayData()
         val start = child.getElementsAppended
-        val n = appendElems(child, x, at.elementType)
-        if (n < 0) vec.putNull(r) else vec.putArray(r, start, n)
+        vec.putArray(r, start, appendElems(child, x, at.elementType))
       case _ => vec.putNull(r)
     }
   }
@@ -309,10 +313,10 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
     et match {
       case ShortType | IntegerType | LongType | FloatType | DoubleType =>
         if (width < 0) return false // string wire → numeric col: slow path
-        // bool wire elements read NULL in float/double columns on the
-        // row path (toCatalyst's asDouble has no Boolean case, matching
-        // the scalar writers) — route to the slow path so the fast fill
-        // cannot emit 0.0/1.0 where the row reader emits null
+        // bool wire elements read NULL in float/double columns
+        // (toCatalyst's asDouble has no Boolean case, matching the
+        // scalar writers) — route to the slow path so the fast fill
+        // cannot emit 0.0/1.0 where toCatalyst yields null
         if (elem == LwesType.Bool && (et == FloatType || et == DoubleType))
           return false
         // count present elements to bound-check the packed payload once
@@ -409,12 +413,12 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
   }
 
   /** Append one wire array's elements to an array column's child
-    * vector; -1 = element type outside the vectorized set (the scan
-    * builder routes those schemas to the row reader — this is the
-    * defensive backstop). Classic wire arrays carry no null elements;
-    * nullable arrays (N_*_ARRAY) and unconvertible elements land as
-    * child nulls — the per-element isNullAt check is a predictable
-    * branch that costs all-present arrays nothing measurable. */
+    * vector, returning the element count; the scan builder rejects
+    * element types outside [[LwesColumnarBatchReader.isArrayElementType]].
+    * Classic wire arrays carry no null elements; nullable arrays
+    * (N_*_ARRAY) and unconvertible elements land as child nulls — the
+    * per-element isNullAt check is a predictable branch that costs
+    * all-present arrays nothing measurable. */
   private def appendElems(
       child: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
       x: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -437,10 +441,14 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
         }
         j += 1
       }
-      // decimal elements (uint64As=decimal + uint64[] attrs — the last
-      // r15 row-reader fallback): append with the same width split
-      // WritableColumnVector.putDecimal uses, so reads land on the
-      // int/long/byte[] representation getDecimal expects
+      case BinaryType => while (j < n) {
+        nn { val b = x.getBinary(j); child.appendByteArray(b, 0, b.length) }
+        j += 1
+      }
+      // decimal elements (uint64As=decimal + uint64[] attrs): append
+      // with the same width split WritableColumnVector.putDecimal uses,
+      // so reads land on the int/long/byte[] representation getDecimal
+      // expects
       case dt: DecimalType => while (j < n) {
         x.get(j, dt) match {
           case d: Decimal =>
@@ -452,11 +460,12 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
               val ub = d.toJavaBigDecimal.unscaledValue.toByteArray
               child.appendByteArray(ub, 0, ub.length)
             }
-          case _ => child.appendNull() // row-path null-element parity
+          case _ => child.appendNull() // unconvertible element: NULL
         }
         j += 1
       }
-      case _ => return -1
+      case other => throw new IllegalStateException(
+        s"array element type $other reached the reader") // builder rejects it
     }
     n
   }
@@ -518,7 +527,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
                   java.lang.Float.parseFloat(new String(b, strOff(off), strLen(len), UTF_8)))
                 catch { case _: NumberFormatException => vec.putNull(r) }
               case LwesType.IpAddr | LwesType.Bool => vec.putNull(r)
-              // row path: asDouble then .toFloat — keep the double hop
+              // toCatalyst: asDouble then .toFloat — keep the double hop
               case _ => vec.putFloat(r, lv.toDouble.toFloat)
             }
         }
@@ -591,7 +600,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
         case at: org.apache.spark.sql.types.ArrayType => new ColWriter {
           // r19: common (token, element type) pairs decode straight
           // into the child vector; everything else (and mismatched
-          // scalars → null) routes through the row path's decode +
+          // scalars → null) routes through the event-object decode +
           // conversion, then the vectorized ArrayData fill above —
           // parity by construction
           def write(r: Int, t: Byte, b: Array[Byte], off: Int, len: Int, lv: Long): Unit =
@@ -1151,7 +1160,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
           ((b(off + 4) & 0xffL) << 24) | ((b(off + 5) & 0xffL) << 16) |
           ((b(off + 6) & 0xffL) << 8) | (b(off + 7) & 0xffL)
       case LwesType.Bool => if (b(off) != 0) 1L else 0L
-      case LwesType.ByteT => b(off).toLong // signed, row-path asLong parity
+      case LwesType.ByteT => b(off).toLong // signed, toCatalyst asLong parity
       case _ => 0L // float/double/arrays: writers take the slow path
     }
 
@@ -1197,11 +1206,11 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
     * completion). `hasHeader` gates the journal-header column
     * replacement: SEQ containers carry no 22-byte frame header, so
     * their ReceiptTime/SenderIP/port/site attrs (if any) stay
-    * payload-written — row-path parity for both containers. Returns
+    * payload-written, as in the event-object decode. Returns
     * 1 = row written, 0 = filtered, -2 = corrupt payload (row rolled
     * back, NOT counted: the caller owns its container's corruption
     * semantics — journals resync per record, SEQ stops the file like
-    * the row path). */
+    * SequenceJournalReader). */
   private def parsePayload(b: Array[Byte], b0: Int, len: Int, r: Int,
       hasHeader: Boolean, time: Long, port: Int, site: Int,
       forceLatin1: Boolean = false): Int = {
@@ -1343,7 +1352,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
           var j = 0
           while (j < cols.length) {
             val c = cols(j)
-            // first occurrence wins (row-path `ev.get` parity); foreign
+            // first occurrence wins (LwesEvent `ev.get` parity); foreign
             // event types keep the column null
             if (stamps(c) != stamp && groupOk(c)) {
               writers(c).write(r, token, b, valOff, valLen, lv)
@@ -1405,7 +1414,7 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
         p += 1
       }
       // ---- null-fill untouched columns (a declared ESF default
-      // materializes instead of NULL — A24 defaults, row-path parity)
+      // materializes instead of NULL — A24 defaults)
       var fills: Array[DefaultCell] = null
       if (defaultEventNames.length > 0) {
         var e = 0
@@ -1447,16 +1456,15 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
 
   // ------------------------------------------ SequenceFile byte path
   /** SEQ containers route through the SAME byte-level payload walk as
-    * journal records (A17 completion — no more object-shaped
-    * [[ColumnShape]] fallback): [[graft.lwes.SequenceJournalReader.nextRawValue]]
+    * journal records (A17 completion): [[graft.lwes.SequenceJournalReader.nextRawValue]]
     * hands back the framed EventWritable value (`[4B BE length][event]`,
     * reference EventWritable.java:52-57) and [[parsePayload]] decodes
     * the event bytes straight into the vectors — no LwesEvent, no
     * per-attribute boxing; name filtering and attr pruning happen on
     * the wire bytes like the journal hot loop. Corruption parity with
-    * the row path: a bad frame or undecodable payload stops the FILE
-    * (the row path's deserialize throws through to the file loop; SEQ
-    * has no record-resync point either way). */
+    * the event-object decode: a bad frame or undecodable payload stops
+    * the FILE (SequenceJournalReader's deserialize throws through to
+    * the file loop; SEQ has no record-resync point either way). */
   private final class SeqFill(s: java.io.InputStream) {
     val reader = new graft.lwes.SequenceJournalReader(s)
 
@@ -1529,5 +1537,15 @@ class LwesColumnarBatchReader(files: Seq[LwesInputPartition],
   override def close(): Unit = {
     closeFile()
     batch.close()
+  }
+}
+
+object LwesColumnarBatchReader {
+  /** Array element types the reader fills from a (one-dimensional) wire
+    * array; the scan builder rejects array columns over any other. */
+  def isArrayElementType(et: DataType): Boolean = et match {
+    case ShortType | IntegerType | LongType | FloatType | DoubleType |
+        BooleanType | StringType | BinaryType | _: DecimalType => true
+    case _ => false
   }
 }

@@ -1046,6 +1046,18 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
         StructType(fullSchema.fields.filter(f => refd.contains(f.name)))
       case None => readSchema
     }
+    // a wire array is one-dimensional: an element type the decoder
+    // cannot fill (nested arrays, maps, structs, tinyint) would read as
+    // arrays of NULLs, so the scan refuses it by name instead
+    dataSchema.fields.foreach { f =>
+      f.dataType match {
+        case ArrayType(et, _) if !LwesColumnarBatchReader.isArrayElementType(et) =>
+          throw new org.apache.spark.sql.AnalysisException(
+            "UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE", Map("format" -> "lwes",
+              "columnName" -> f.name, "columnType" -> f.dataType.sql))
+        case _ =>
+      }
+    }
     val pcols = samplePartitionCols.toSeq.filter(dataSchema.fieldNames.contains)
     val ncol = Option(options.get(LwesOptions.EventNameColumn))
       .filter(dataSchema.fieldNames.contains)
@@ -1093,26 +1105,6 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
         // a pushed top-N must NOT early-stop partitions (journal order
         // is not receipt order), so it clears the row limit too
         if (finalAgg.isDefined || finalTopN.isDefined) -1 else pushedLimit, ncol,
-        // the vectorized batch path covers scalar columns AND array
-        // columns over every element type the source can PRODUCE —
-        // r15: primitive/string elements (append to the child vector,
-        // rows record explicit (start, count) offsets); r16: decimal
-        // elements (uint64As=decimal + uint64[] attrs, appended with
-        // putDecimal's own width split). Only user-declared NESTED
-        // element shapes (array-of-array/map — junk for a 1-D wire
-        // array either way) still route to the row reader, so no
-        // source-derivable schema drags a mixed scan off the fast path
-        columnar = finalAgg.isEmpty &&
-          options.getBoolean(LwesOptions.Vectorized, true) &&
-          dataSchema.fields.forall(_.dataType match {
-            case ArrayType(et, _) => et match {
-              case ShortType | IntegerType | LongType | FloatType |
-                  DoubleType | BooleanType | StringType |
-                  _: DecimalType => true
-              case _ => false
-            }
-            case _ => true
-          }),
         attrFilters = attrFilters.toSeq
           .filter(f => f.references.forall(dataSchema.fieldNames.contains)),
         esfDefaults = Option(options.get(LwesOptions.Esf)).map { p =>
@@ -1192,8 +1184,8 @@ final case class LwesFilesPartition(files: Seq[LwesInputPartition])
   * partition-value tuple) with its path-derived key values so Spark's
   * KeyGroupedPartitioning machinery can co-locate two journal tables
   * without a shuffle. Key columns are path partition columns, which
-  * read back as strings ([[ColumnShape.valueFor]]), so the key row is
-  * UTF8String-typed to match. Reader factories unwrap via
+  * read back as strings, so the key row is UTF8String-typed to match.
+  * Reader factories unwrap via
   * [[LwesScan.partitionFiles]]. */
 final case class LwesKeyedPartition(inner: InputPartition,
     keyVals: Seq[String]) extends InputPartition
@@ -2416,7 +2408,7 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
       // carries the post-replan skim placement and extra filters
       // across the gap, snapshotted when tasks serialize (which
       // strictly follows runtime filtering).
-      new LwesPartitionReaderFactory(config,
+      new LwesScanReaderFactory(config,
         SerializableHadoopConf.broadcast(LwesDataSource.hadoopConf()),
         runtimeState)
   }
@@ -2426,10 +2418,7 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
     // the assumption so a future planner change fails loudly instead of
     // streaming partial rows under a batch-agg schema.
     require(aggSpec.isEmpty, "aggregate pushdown is batch-only")
-    // streaming stays row-based: micro-batches are admission-bounded and
-    // small, so vectorization buys little and widens the stateful-op
-    // surface under test
-    new LwesMicroBatchStream(config.copy(columnar = false), roots,
+    new LwesMicroBatchStream(config, roots,
       maxFilesPerTrigger, checkpointLocation, maxBytesPerTrigger,
       timeLo = timeLo, timeHi = timeHi, timeSlackMs = timeSlackMs,
       timeExactOnly = timeExactOnly, splitTargetBytes = splitTargetBytes,
@@ -2916,7 +2905,7 @@ class LwesMicroBatchStream(config: LwesReadConfig, roots: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LwesPartitionReaderFactory(config,
+    new LwesScanReaderFactory(config,
       SerializableHadoopConf.broadcast(conf))
 
   override def commit(end: streaming.Offset): Unit = ()
@@ -2959,7 +2948,7 @@ final class LwesScanRuntimeState extends Serializable {
   @volatile var extraFilters: Seq[Filter] = Nil
 }
 
-class LwesPartitionReaderFactory(config: LwesReadConfig,
+class LwesScanReaderFactory(config: LwesReadConfig,
     bconf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     state: LwesScanRuntimeState = new LwesScanRuntimeState)
     extends PartitionReaderFactory {
@@ -3011,18 +3000,13 @@ class LwesPartitionReaderFactory(config: LwesReadConfig,
   private def wrap[T](r: PartitionReader[T], dropped: Long): PartitionReader[T] =
     if (dropped == 0L) r else new SkimMetricReader(r, dropped)
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val cfg = effConfig
-    val files = LwesScan.partitionFiles(partition)
-    val (kept, dropped) = statsSkim(files, cfg)
-    wrap(kept match {
-      case Seq(one) => new LwesPartitionReader(one, cfg, bconf.value.value)
-      case many => new LwesMultiFileReader(many, cfg, bconf.value.value)
-    }, dropped)
-  }
+  /** Every partition is columnar, so Spark (batch and micro-batch scans
+    * alike) only ever asks for [[createColumnarReader]]. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "lwes scans are columnar: use createColumnarReader")
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    config.columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -3031,332 +3015,4 @@ class LwesPartitionReaderFactory(config: LwesReadConfig,
     val (kept, dropped) = statsSkim(files, cfg)
     wrap(new LwesColumnarBatchReader(kept, cfg, bconf.value.value), dropped)
   }
-}
-
-/** Sequentially chains the per-file readers of a bin-packed partition.
-  * Per-file semantics (torn-file stop, record resync, partition-value
-  * injection) are exactly the single-file reader's — this class only
-  * concatenates, enforces the pushed LIMIT across the whole bin, and
-  * aggregates metrics. */
-class LwesMultiFileReader(files: Seq[LwesInputPartition],
-    config: LwesReadConfig, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-  private val it = files.iterator
-  private var cur: LwesPartitionReader = null
-  private var emittedTotal = 0L
-  private val acc = scala.collection.mutable.Map.empty[String, Long]
-    .withDefaultValue(0L)
-
-  override def next(): Boolean = {
-    if (config.limit >= 0 && emittedTotal >= config.limit) return false
-    while (true) {
-      if (cur == null) {
-        if (!it.hasNext) return false
-        cur = new LwesPartitionReader(it.next(), config, conf)
-      }
-      if (cur.next()) { emittedTotal += 1; return true }
-      cur.currentMetricsValues().foreach(m => acc(m.name()) += m.value())
-      cur.close()
-      cur = null
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = cur.get()
-
-  override def currentMetricsValues():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val live = if (cur == null) Map.empty[String, Long]
-      else cur.currentMetricsValues().map(m => m.name() -> m.value()).toMap
-    (acc.keySet ++ live.keySet).toArray.map(k =>
-      LwesTaskMetric(k, acc(k) + live.getOrElse(k, 0L)))
-  }
-
-  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/** Schema→event column shaping, derived ONCE from the read config and
-  * shared by the row and columnar readers — one rule for name columns,
-  * path-derived partition columns, per-event-type nulling, and
-  * attribute conversion, so the two output paths cannot drift. */
-private[lwes] final class ColumnShape(config: LwesReadConfig) extends Serializable {
-  private val schema = config.schema
-  private val attrNames: Array[String] =
-    schema.fields.map(f => config.attrOf(f.name))
-  private val requiredEvent: Array[String] =
-    schema.fields.map(f => config.eventFor.getOrElse(f.name, ""))
-  private val isPartition: Array[Boolean] =
-    schema.fields.map(f => config.partitionCols.contains(f.name))
-  private val nameColIdx: Int =
-    config.eventNameCol.map(schema.fieldIndex).getOrElse(-1)
-
-  /** ESF defaults per event as PRE-CONVERTED per-column Catalyst
-    * values — a missing attribute materializes its declared default
-    * through [[LwesOptions.toCatalyst]] exactly as a wire-present
-    * value of the declared type would (A24). */
-  private val defaultsByEvent: Map[String, Array[Any]] =
-    config.esfDefaults.map { case (event, byAttr) =>
-      event -> Array.tabulate[Any](schema.length) { i =>
-        if (i == nameColIdx || isPartition(i)) null
-        else if (requiredEvent(i).nonEmpty && requiredEvent(i) != event) null
-        else byAttr.get(attrNames(i))
-          .map(d => LwesOptions.toCatalyst(d, schema.fields(i).dataType)).orNull
-      }
-    }
-
-  /** Catalyst value of column `i` for `ev` (null = SQL NULL). */
-  def valueFor(i: Int, ev: LwesEvent,
-      partitionValues: Map[String, String]): Any =
-    if (i == nameColIdx) UTF8String.fromString(ev.name)
-    else if (isPartition(i))
-      partitionValues.get(schema.fields(i).name)
-        .map(UTF8String.fromString).orNull
-    else if (requiredEvent(i).nonEmpty && requiredEvent(i) != ev.name)
-      null // column mapped to a different event type
-    else ev.get(attrNames(i)) match {
-      case Some(a) => LwesOptions.toCatalyst(a, schema.fields(i).dataType)
-      case None =>
-        if (defaultsByEvent.isEmpty) null
-        else defaultsByEvent.get(ev.name) match {
-          case Some(d) => d(i)
-          case None => null
-        }
-    }
-}
-
-class LwesPartitionReader(partition: LwesInputPartition, config: LwesReadConfig,
-    conf: Configuration)
-    extends PartitionReader[InternalRow] with org.apache.spark.internal.Logging {
-
-  private val schema = config.schema
-  private val nCols = schema.length
-  private val shape = new ColumnShape(config)
-
-  private var skipped = 0L
-  private val nameFilter: String => Boolean =
-    if (config.eventNames.isEmpty) null
-    else (n: String) => {
-      val ok = config.eventNames(n)
-      if (!ok) skipped += 1
-      ok
-    }
-  private val wanted: String => Boolean = {
-    val w = config.wantedAttrs
-    w.contains _
-  }
-
-  private var current: InternalRow = _
-  private var corrupt = false
-  private var emitted = 0
-  private var filtered = 0L
-
-  // Pushed attribute predicates, evaluated on each event BEFORE the
-  // full row materializes (the row-path counterpart of the columnar
-  // reader's in-parse short-circuit — this path still parses the
-  // event, but a non-matching record never shapes, allocates, or
-  // crosses into the query). Only definite failures drop a record;
-  // Spark re-applies every filter as residual, so deferred shapes
-  // cost nothing but a pass-through.
-  private val rowFilters: Array[(Int, Any => Boolean)] = {
-    def idx(a: String): Option[Int] =
-      if (schema.fieldNames.contains(a)) Some(schema.fieldIndex(a)) else None
-    def num(a: String, p: Long => Boolean): Option[(Int, Any => Boolean)] =
-      idx(a).map(i => (i, (x: Any) => x != null &&
-        p(x.asInstanceOf[Number].longValue())))
-    // float/double predicates evaluate under Spark's exact comparison
-    // order (compareDoubles: NaN greatest, ±0.0 equal) — the Number
-    // catch-alls below would TRUNCATE, which is unsound for ranges
-    // (e.g. 2.7 > 2.3 but trunc 2 > 2 is false). Float column values
-    // widen to double exactly, so one double comparator serves both.
-    def dblLitOf(v: Any): Option[Double] = v match {
-      case d: java.lang.Double => Some(d.doubleValue())
-      case f: java.lang.Float => Some(f.doubleValue())
-      case _ => None
-    }
-    def dbl(a: String, v: Any, p: Int => Boolean): Option[(Int, Any => Boolean)] =
-      dblLitOf(v).flatMap { lit =>
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          p(org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(x.asInstanceOf[Number].doubleValue(), lit))))
-      }
-    config.attrFilters.toArray.flatMap {
-      case EqualTo(a, v: String) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].equals(lit)))
-      case EqualTo(a, v @ (_: java.lang.Float | _: java.lang.Double)) =>
-        dbl(a, v, _ == 0)
-      case EqualTo(a, v: Number) => num(a, _ == v.longValue())
-      case GreaterThan(a, v: String) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].compareTo(lit) > 0))
-      case GreaterThanOrEqual(a, v: String) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].compareTo(lit) >= 0))
-      case LessThan(a, v: String) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].compareTo(lit) < 0))
-      case LessThanOrEqual(a, v: String) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].compareTo(lit) <= 0))
-      case GreaterThan(a, v @ (_: java.lang.Float | _: java.lang.Double)) =>
-        dbl(a, v, _ > 0)
-      case GreaterThanOrEqual(a, v @ (_: java.lang.Float | _: java.lang.Double)) =>
-        dbl(a, v, _ >= 0)
-      case LessThan(a, v @ (_: java.lang.Float | _: java.lang.Double)) =>
-        dbl(a, v, _ < 0)
-      case LessThanOrEqual(a, v @ (_: java.lang.Float | _: java.lang.Double)) =>
-        dbl(a, v, _ <= 0)
-      case GreaterThan(a, v: Number) => num(a, _ > v.longValue())
-      case GreaterThanOrEqual(a, v: Number) => num(a, _ >= v.longValue())
-      case LessThan(a, v: Number) => num(a, _ < v.longValue())
-      case LessThanOrEqual(a, v: Number) => num(a, _ <= v.longValue())
-      case org.apache.spark.sql.sources.StringStartsWith(a, v) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].startsWith(lit)))
-      case org.apache.spark.sql.sources.StringEndsWith(a, v) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].endsWith(lit)))
-      case org.apache.spark.sql.sources.StringContains(a, v) =>
-        val lit = UTF8String.fromString(v)
-        idx(a).map(i => (i, (x: Any) => x != null &&
-          x.asInstanceOf[UTF8String].contains(lit)))
-      case org.apache.spark.sql.sources.In(a, vs) =>
-        idx(a).map { i =>
-          schema.fields(i).dataType match {
-            case org.apache.spark.sql.types.StringType =>
-              val set = vs.map(x =>
-                UTF8String.fromString(x.asInstanceOf[String])).toSet
-              (i, (x: Any) => x != null &&
-                set.contains(x.asInstanceOf[UTF8String]))
-            case org.apache.spark.sql.types.FloatType |
-                org.apache.spark.sql.types.DoubleType =>
-              // membership under compareDoubles: ±0.0 literals match
-              // either sign, NaN literals match NaN rows (Spark's
-              // EqualTo semantics for floats)
-              val lits = vs.map(_.asInstanceOf[Number].doubleValue())
-              (i, (x: Any) => x != null && {
-                val xv = x.asInstanceOf[Number].doubleValue()
-                lits.exists(l => org.apache.spark.sql.catalyst.util
-                  .SQLOrderingUtil.compareDoubles(xv, l) == 0)
-              })
-            case _ =>
-              val set = vs.map(_.asInstanceOf[Number].longValue()).toSet
-              (i, (x: Any) => x != null &&
-                set.contains(x.asInstanceOf[Number].longValue()))
-          }
-        }
-      case org.apache.spark.sql.sources.IsNotNull(a) =>
-        idx(a).map(i => (i, (x: Any) => x != null))
-      case _ => None
-    }
-  }
-
-  private val isFilterCol: Array[Boolean] = {
-    val m = new Array[Boolean](nCols)
-    rowFilters.foreach { case (i, _) => m(i) = true }
-    m
-  }
-
-  /** Evaluates the pushed predicates, STASHING each probed column's
-    * value into `row` as it goes — a passing event reuses them instead
-    * of re-running the attr decode (the probe IS the materialization
-    * for those columns). False = definite rejection. */
-  private def passesRowFilters(ev: graft.lwes.LwesEvent,
-      row: GenericInternalRow): Boolean = {
-    var j = 0
-    while (j < rowFilters.length) {
-      val (i, p) = rowFilters(j)
-      val v = shape.valueFor(i, ev, partition.partitionValues)
-      if (!p(v)) return false
-      row.update(i, v)
-      j += 1
-    }
-    true
-  }
-
-  // Construction already reads (magic-byte sniff + decompressor
-  // buffering): a file torn inside its first compressed block throws
-  // HERE, not in next() — same tolerance applies (0 rows, loud warning,
-  // no task failure). Transport IOExceptions stay fatal.
-  private val reader: graft.lwes.EventStreamReader =
-    try LwesDataSource.openReader(partition.path, conf, nameFilter, wanted,
-      partition.range)
-    catch {
-      case e if LwesDataSource.isCorruption(e) =>
-        logWarning(s"corrupt journal head in ${partition.path}: ${e.getMessage}; " +
-          "skipping this file")
-        corrupt = true
-        null
-    }
-
-  /** Next event from this file, or null at end — shared by the row
-    * path below and the columnar batch reader (which does its own
-    * row-shaping). Corruption tolerance lives here so both paths treat
-    * torn tails identically. */
-  private[lwes] def nextEvent(): graft.lwes.LwesEvent = {
-    if (corrupt) return null
-    try {
-      reader.next() match {
-        case Some(e) => e
-        case None => null
-      }
-    } catch {
-      // A corrupt/truncated tail ends this file, not the job — journals
-      // are harvested off the wire and torn tails are routine; the
-      // reference behaved the same way (readEvent catches, returns null
-      // = EOF, DatagramPacketInputStream.java:79-85). ZipException /
-      // ZstdIOException are the codec-corruption signals (bad bytes, not
-      // just short reads); transport-level IOExceptions stay fatal so a
-      // flaky-network read is retried by Spark instead of silently
-      // truncating the file.
-      case e if LwesDataSource.isCorruption(e) =>
-        logWarning(s"corrupt journal tail in ${partition.path}: ${e.getMessage}; " +
-          "stopping this file")
-        corrupt = true
-        null
-    }
-  }
-
-  private[lwes] def countEmitted(): Unit = emitted += 1
-
-  override def next(): Boolean = {
-    if (config.limit >= 0 && emitted >= config.limit) return false
-    while (true) {
-      val ev = nextEvent()
-      if (ev == null) return false
-      val row = new GenericInternalRow(nCols)
-      if (rowFilters.isEmpty || passesRowFilters(ev, row)) {
-        var i = 0
-        while (i < nCols) {
-          if (!isFilterCol(i))
-            row.update(i, shape.valueFor(i, ev, partition.partitionValues))
-          i += 1
-        }
-        current = row
-        emitted += 1
-        return true
-      }
-      filtered += 1
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
-
-  override def currentMetricsValues():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LwesTaskMetric("eventsParsed", emitted),
-      LwesTaskMetric("eventsSkipped", skipped),
-      LwesTaskMetric("tornFiles", if (corrupt) 1L else 0L),
-      LwesTaskMetric("corruptRecords",
-        if (reader != null) reader.corruptRecords else 0L),
-      LwesTaskMetric("rowsFiltered", filtered))
 }

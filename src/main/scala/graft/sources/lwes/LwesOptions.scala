@@ -29,7 +29,6 @@ final case class LwesReadConfig(
     partitionCols: Seq[String], // path-derived k=v columns
     limit: Int = -1, // pushed-down per-partition row limit (-1 = none)
     eventNameCol: Option[String] = None, // column carrying the event type
-    columnar: Boolean = true, // vectorized ColumnarBatch output (batch scans)
     // comparison filters on data-attribute columns, evaluated INSIDE the
     // vectorized parse so non-matching records short-circuit before row
     // materialization (A4's name-skip generalized to values); Spark
@@ -37,15 +36,10 @@ final case class LwesReadConfig(
     attrFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
     // ESF template defaults (event -> attr -> typed default): a record
     // missing the attribute materializes the declared default instead
-    // of NULL (lwes-java EventTemplateDB semantics) — both readers
-    // route the default through the same conversion a wire value takes
+    // of NULL (lwes-java EventTemplateDB semantics) — the reader routes
+    // the default through the same conversion a wire value takes
     esfDefaults: Map[String, Map[String, graft.lwes.LwesAttr]] = Map.empty)
   extends Serializable {
-
-  /** Attributes the deserializer must materialize. */
-  def wantedAttrs: Set[String] =
-    schema.fieldNames.filterNot(partitionCols.contains)
-      .filterNot(eventNameCol.contains).map(attrOf).toSet
 
   def attrOf(col: String): String = attrFor.getOrElse(col, col)
 }
@@ -201,10 +195,6 @@ object LwesOptions {
   // record is never lost; `splitFramesPruned` source metric counts.
   val ReceiptTimeMin = "receiptTimeMin"
   val ReceiptTimeMax = "receiptTimeMax"
-  // vectorized scan output (default true): events land in ColumnarBatch
-  // vectors instead of one GenericInternalRow each, feeding ColumnarToRow
-  // codegen from flat arrays; batch scans only (streaming stays row-based)
-  val Vectorized = "vectorized"
   // attribute zone maps (A27). Write side (`writeStats`, default true):
   // batch AND streaming writes drop a hidden `.<journal>.stats` sidecar
   // with per-attr record counts and integral/ASCII-string min/max (the

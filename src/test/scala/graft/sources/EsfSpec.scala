@@ -245,27 +245,23 @@ class EsfSpec extends AnyFunSuite {
       .toDF("id", "prio", "bucket")
       .write.format("lwes").option("eventName", "Deft::Ev")
       .mode("append").save(dir)
-    for (vectorized <- Seq("true", "false")) {
-      val rows = spark.read.format("lwes")
-        .option("eventName", "Deft::Ev")
-        .option("vectorized", vectorized)
-        .option("esf", defaultsEsfFile()).load(dir)
-        .select("id", "prio", "retries", "score", "flagged", "bucket",
-          "dims", "tags", "host")
-        .orderBy("id").collect()
-      assert(rows.map(_.getString(1)).toSeq == Seq("high", "low", "mid"),
-        s"vectorized=$vectorized")
-      assert(rows.map(_.getLong(2)).toSeq == Seq(0L, 0L, 0L))
-      assert(rows.map(_.getDouble(3)).toSeq == Seq(1.5, 1.5, 1.5))
-      assert(rows.map(_.getBoolean(4)).toSeq == Seq(false, false, false))
-      assert(rows.map(_.getInt(5)).toSeq == Seq(2, 5, 7)) // present values win
-      assert(rows.map(_.getSeq[Int](6)).toSeq ==
-        Seq(Seq(1, 2, 3), Seq(1, 2, 3), Seq(1, 2, 3)))
-      assert(rows.map(_.getSeq[String](7)).toSeq ==
-        Seq(Seq("a", "b"), Seq("a", "b"), Seq("a", "b")))
-      assert(rows.map(_.getString(8)).toSeq ==
-        Seq("10.0.0.1", "10.0.0.1", "10.0.0.1"))
-    }
+    val rows = spark.read.format("lwes")
+      .option("eventName", "Deft::Ev")
+      .option("esf", defaultsEsfFile()).load(dir)
+      .select("id", "prio", "retries", "score", "flagged", "bucket",
+        "dims", "tags", "host")
+      .orderBy("id").collect()
+    assert(rows.map(_.getString(1)).toSeq == Seq("high", "low", "mid"))
+    assert(rows.map(_.getLong(2)).toSeq == Seq(0L, 0L, 0L))
+    assert(rows.map(_.getDouble(3)).toSeq == Seq(1.5, 1.5, 1.5))
+    assert(rows.map(_.getBoolean(4)).toSeq == Seq(false, false, false))
+    assert(rows.map(_.getInt(5)).toSeq == Seq(2, 5, 7)) // present values win
+    assert(rows.map(_.getSeq[Int](6)).toSeq ==
+      Seq(Seq(1, 2, 3), Seq(1, 2, 3), Seq(1, 2, 3)))
+    assert(rows.map(_.getSeq[String](7)).toSeq ==
+      Seq(Seq("a", "b"), Seq("a", "b"), Seq("a", "b")))
+    assert(rows.map(_.getString(8)).toSeq ==
+      Seq("10.0.0.1", "10.0.0.1", "10.0.0.1"))
   }
 
   test("defaults: the write path encodes declared defaults for unset attributes") {
@@ -310,19 +306,16 @@ class EsfSpec extends AnyFunSuite {
       .toDF("id", "ev")
       .write.format("lwes").option("eventNameColumn", "ev")
       .mode("append").save(dir) // no template: src/w unset on the wire
-    for (vectorized <- Seq("true", "false")) {
-      val rows = spark.read.format("lwes")
-        .option("esf", esf) // union schema over both declared events
-        .option("eventNameColumn", "ev")
-        .option("vectorized", vectorized)
-        .load(dir)
-        .select("id", "src", "w", "ev").orderBy("id").collect()
-      assert(rows.map(_.getString(1)).toSeq ==
-        Seq("a-side", "b-side", "a-side"), s"vectorized=$vectorized")
-      // w is declared (with a default) only on Ev::A: B rows stay NULL
-      assert(rows.map(r => if (r.isNullAt(2)) -1L else r.getLong(2)).toSeq ==
-        Seq(10L, -1L, 10L), s"vectorized=$vectorized")
-    }
+    val rows = spark.read.format("lwes")
+      .option("esf", esf) // union schema over both declared events
+      .option("eventNameColumn", "ev")
+      .load(dir)
+      .select("id", "src", "w", "ev").orderBy("id").collect()
+    assert(rows.map(_.getString(1)).toSeq ==
+      Seq("a-side", "b-side", "a-side"))
+    // w is declared (with a default) only on Ev::A: B rows stay NULL
+    assert(rows.map(r => if (r.isNullAt(2)) -1L else r.getLong(2)).toSeq ==
+      Seq(10L, -1L, 10L))
   }
 
   test("defaults: pushed predicates see the materialized default, both paths") {
@@ -335,20 +328,17 @@ class EsfSpec extends AnyFunSuite {
       .write.format("lwes").option("eventName", "Deft::Ev")
       .mode("append").save(dir)
     val esf = defaultsEsfFile()
-    for (vectorized <- Seq("true", "false")) {
-      def read() = spark.read.format("lwes")
-        .option("eventName", "Deft::Ev")
-        .option("vectorized", vectorized)
-        .option("esf", esf).load(dir)
-      assert(read().filter(col("retries") === 0L).count() == 3,
-        s"vectorized=$vectorized: default-matching predicate kept rows")
-      assert(read().filter(col("retries") === 1L).count() == 0,
-        s"vectorized=$vectorized: default-missing predicate dropped rows")
-      assert(read().filter(col("prio") === "low").count() == 3,
-        s"vectorized=$vectorized: string default predicate")
-      assert(read().filter(col("prio").startsWith("hi")).count() == 0,
-        s"vectorized=$vectorized: string prefix vs default")
-    }
+    def read() = spark.read.format("lwes")
+      .option("eventName", "Deft::Ev")
+      .option("esf", esf).load(dir)
+    assert(read().filter(col("retries") === 0L).count() == 3,
+      "default-matching predicate kept rows")
+    assert(read().filter(col("retries") === 1L).count() == 0,
+      "default-missing predicate dropped rows")
+    assert(read().filter(col("prio") === "low").count() == 3,
+      "string default predicate")
+    assert(read().filter(col("prio").startsWith("hi")).count() == 0,
+      "string prefix vs default")
   }
 
   test("defaults: the STREAMING reader materializes declared defaults too") {

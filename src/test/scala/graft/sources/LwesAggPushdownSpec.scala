@@ -306,6 +306,37 @@ class LwesAggPushdownSpec extends AnyFunSuite {
     assert(parsed(q) == 200L) // MIN per name is not in any metadata: streams
   }
 
+  test("streamed fold keeps its string group keys and MIN/MAX across batches") {
+    // one gzip journal (one task, no metadata) with > 4096 events per
+    // name: the fold reads the batch reader's reused vectors, so a key
+    // or bound it keeps from one batch must survive the next batch
+    val dir = tmp()
+    val names = Seq("S::A", "S::Bee", "S::Gamma") // keys of unequal length
+    val w = JournalWriter.create(s"$dir/j.journal.gz")
+    (0 until 15000).foreach { i =>
+      // each name's MIN and MAX are its first two records: bytes the
+      // next batch's first writes land on
+      val s = i / 3 match { case 0 => "a-min"; case 1 => "z-max"; case k => f"m$k%05d" }
+      w.write(LwesEvent(names(i % 3)).setInt64("id", i.toLong).setString("s", s))
+    }
+    w.close()
+    def q(push: Boolean, extra: Seq[(String, String)]) =
+      extra.foldLeft(spark.read.format("lwes").schema("s string, ev string")
+          .option("eventNameColumn", "ev").option("aggPushdown", push.toString)) {
+          case (r, (k, v)) => r.option(k, v)
+        }.load(dir)
+        .groupBy(col("ev")).agg(min(col("s")).as("mn"), max(col("s")).as("mx"),
+          count(lit(1)).as("n")).orderBy("ev")
+    for (extra <- Seq(Seq("eventName" -> "S::Bee"), Nil)) {
+      val pushed = q(push = true, extra)
+      val got = pushed.collect().toSeq
+      assert(plan(pushed).contains("groupBy=[ev]"), plan(pushed))
+      assert(parsed(pushed) == (if (extra.isEmpty) 15000L else 5000L))
+      assert(got.length == (if (extra.isEmpty) 3 else 1))
+      assert(got == q(push = false, extra).collect().toSeq, s"eventName filter: $extra")
+    }
+  }
+
   test("SUM over integral columns pushes and answers from sidecars, zero parses") {
     // r19: SUM(int/long) joins COUNT/MIN/MAX on the metadata path —
     // the sidecar's sm= field carries the exact per-file sum

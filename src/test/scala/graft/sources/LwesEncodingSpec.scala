@@ -73,7 +73,7 @@ class LwesEncodingSpec extends AnyFunSuite {
 
   test("codec: an out-of-range enc value is rejected on BOTH directions") {
     // write side: serializing it would produce a journal whose records
-    // silently vanish on read (both readers treat it as corruption)
+    // silently vanish on read (the reader treats it as corruption)
     val ev = LwesEvent("E").setInt16(LwesCodec.EncAttr, 7).setString("s", "x")
     val we = intercept[IllegalArgumentException](LwesCodec.serialize(ev))
     assert(we.getMessage.contains("enc"), we.getMessage)
@@ -114,14 +114,12 @@ class LwesEncodingSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("s", StringType),
       StructField("sa", ArrayType(StringType))))
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").schema(schema)
-        .option("vectorized", vec).option("eventName", "Enc::E")
-        .load(dir).orderBy("id").collect()
-      assert(got(0).getString(1) == Latin, s"vec=$vec")
-      assert(got(0).getSeq[String](2) == Seq(Latin, "plain"), s"vec=$vec")
-      assert(got(1).getString(1) == "café", s"vec=$vec")
-    }
+    val got = spark.read.format("lwes").schema(schema)
+      .option("eventName", "Enc::E")
+      .load(dir).orderBy("id").collect()
+    assert(got(0).getString(1) == Latin)
+    assert(got(0).getSeq[String](2) == Seq(Latin, "plain"))
+    assert(got(1).getString(1) == "café")
     // DSv2 write option produces the same wire shape and reads back equal
     val dir2 = Files.createTempDirectory("enc-write").toString
     val rows = Seq(Row(1L, Latin, Seq(Latin, "plain")), Row(2L, "ascii only", Seq("x")))
@@ -169,19 +167,17 @@ class LwesEncodingSpec extends AnyFunSuite {
     }
     w.close()
     val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
-    for (vec <- Seq("true", "false")) {
-      val df = spark.read.format("lwes").schema(schema)
-        .option("vectorized", vec).option("eventName", "P::E").load(dir)
-      // non-ASCII equality literal: early byte-compare must not wrongly
-      // reject (Latin-1 wire bytes ≠ UTF-8 literal bytes)
-      assert(df.filter(org.apache.spark.sql.functions.col("s") === Latin).count() == 5,
-        s"vec=$vec eq")
-      // ASCII prefix predicate rejects Latin rows correctly in-parse:
-      // "plain-1" prefixes ids 1,10,11,13,14,15,17,18,19 (12 and 16
-      // carry the Latin value instead)
-      assert(df.filter(org.apache.spark.sql.functions.col("s").startsWith("plain-1")).count() == 9,
-        s"vec=$vec prefix")
-    }
+    val df = spark.read.format("lwes").schema(schema)
+      .option("eventName", "P::E").load(dir)
+    // non-ASCII equality literal: early byte-compare must not wrongly
+    // reject (Latin-1 wire bytes ≠ UTF-8 literal bytes)
+    assert(df.filter(org.apache.spark.sql.functions.col("s") === Latin).count() == 5,
+      "eq")
+    // ASCII prefix predicate rejects Latin rows correctly in-parse:
+    // "plain-1" prefixes ids 1,10,11,13,14,15,17,18,19 (12 and 16
+    // carry the Latin value instead)
+    assert(df.filter(org.apache.spark.sql.functions.col("s").startsWith("plain-1")).count() == 9,
+      "prefix")
   }
 
   test("stringEncoding composes with ESF template writes and template reads") {
@@ -203,15 +199,12 @@ class LwesEncodingSpec extends AnyFunSuite {
       .write.format("lwes").option("eventName", "Enc::T")
       .option("esf", esf).option("stringEncoding", "ISO-8859-1")
       .mode("append").save(dir)
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").option("esf", esf)
-        .option("eventName", "Enc::T").option("vectorized", vec)
-        .load(dir).orderBy("id").collect()
-      val si = got(0).fieldIndex("s")
-      assert(got(0).getString(si) == Latin, s"vec=$vec")
-      assert(got(0).getSeq[String](got(0).fieldIndex("tags")) == Seq(Latin, "x"),
-        s"vec=$vec")
-    }
+    val got = spark.read.format("lwes").option("esf", esf)
+      .option("eventName", "Enc::T")
+      .load(dir).orderBy("id").collect()
+    val si = got(0).fieldIndex("s")
+    assert(got(0).getString(si) == Latin)
+    assert(got(0).getSeq[String](got(0).fieldIndex("tags")) == Seq(Latin, "x"))
   }
 
   test("writer refuses stringEncoding=ISO-8859-1 combined with an enc data column") {

@@ -20,7 +20,7 @@ class LwesFuzzSpec extends AnyFunSuite {
 
   private val types: Seq[DataType] = Seq(BooleanType, ShortType, IntegerType,
     LongType, FloatType, DoubleType, StringType,
-    // modern array tokens (r15: vectorized on both paths; wire arrays
+    // modern array tokens (r15: vectorized; wire arrays
     // carry no null elements, including the empty array)
     ArrayType(ShortType, containsNull = false),
     ArrayType(IntegerType, containsNull = false),
@@ -118,20 +118,16 @@ class LwesFuzzSpec extends AnyFunSuite {
       (if (latin1) w0.option("stringEncoding", "ISO-8859-1") else w0)
         .mode("append").save(dir)
       val exp = df.collect().map(r => r.toSeq.map(normalize)).sortBy(_.toString)
-      // BOTH output paths must reproduce the source exactly — the
-      // vectorized reader (arrays included since r15) and the row
-      // reader are fuzz-pinned against each other here
-      Seq(true, false).foreach { vec =>
-        val back = spark.read.format("lwes").schema(full)
-          .option("vectorized", vec.toString)
-          .option("eventName", s"Fuzz::T$trial").load(dir)
-        val got = back.collect().map(r => r.toSeq.map(normalize)).sortBy(_.toString)
-        assert(got.length == exp.length, s"trial $trial vec=$vec: row count")
-        exp.zip(got).zipWithIndex.foreach { case ((e, g), i) =>
-          assert(e == g,
-            s"trial $trial vec=$vec row $i (seedShift=$seedShift): " +
-              s"expected $e got $g (schema $full, comp=$comp)")
-        }
+      // the scan must reproduce the source exactly (arrays included
+      // since r15)
+      val back = spark.read.format("lwes").schema(full)
+        .option("eventName", s"Fuzz::T$trial").load(dir)
+      val got = back.collect().map(r => r.toSeq.map(normalize)).sortBy(_.toString)
+      assert(got.length == exp.length, s"trial $trial: row count")
+      exp.zip(got).zipWithIndex.foreach { case ((e, g), i) =>
+        assert(e == g,
+          s"trial $trial row $i (seedShift=$seedShift): " +
+            s"expected $e got $g (schema $full, comp=$comp)")
       }
     }
   }
@@ -291,23 +287,21 @@ class LwesFuzzSpec extends AnyFunSuite {
       val expected = data.map(vs => vs.zip(attrs).map {
         case (v, (_, _, _, _, dflt)) => if (v != null) v else dflt.orNull
       })
-      for (vec <- Seq(true, false)) {
-        val got = spark.read.format("lwes").option("eventName", s"Fz::T$trial")
-          .option("esf", esf).option("vectorized", vec.toString)
-          .schema(full).load(dir)
-          .orderBy("rid").collect()
-        assert(got.length == nRows, s"trial $trial vec=$vec rows")
-        got.zipWithIndex.foreach { case (row, r) =>
-          attrs.indices.foreach { i =>
-            val g = normalize(row.get(i + 1))
-            val e = normalize(expected(r)(i))
-            assert(g == e,
-              s"trial $trial vec=$vec row $r (seedShift=$seedShift) " +
-                s"attr ${attrs(i)._1} " +
-                s"(${if (attrs(i)._4) "nullable " else ""}" +
-                s"${attrs(i)._2}${if (attrs(i)._3) "[]" else ""}): " +
-                s"expected $e got $g\ntemplate:\n$tpl")
-          }
+      val got = spark.read.format("lwes").option("eventName", s"Fz::T$trial")
+        .option("esf", esf)
+        .schema(full).load(dir)
+        .orderBy("rid").collect()
+      assert(got.length == nRows, s"trial $trial rows")
+      got.zipWithIndex.foreach { case (row, r) =>
+        attrs.indices.foreach { i =>
+          val g = normalize(row.get(i + 1))
+          val e = normalize(expected(r)(i))
+          assert(g == e,
+            s"trial $trial row $r (seedShift=$seedShift) " +
+              s"attr ${attrs(i)._1} " +
+              s"(${if (attrs(i)._4) "nullable " else ""}" +
+              s"${attrs(i)._2}${if (attrs(i)._3) "[]" else ""}): " +
+              s"expected $e got $g\ntemplate:\n$tpl")
         }
       }
     }

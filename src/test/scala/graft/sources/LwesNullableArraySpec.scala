@@ -53,30 +53,27 @@ class LwesNullableArraySpec extends AnyFunSuite {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.format("lwes").option("eventName", "N::Rt")
       .option("compression", "zstd").mode("append").save(dir)
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").schema(schema)
-        .option("vectorized", vec)
-        .option("eventName", "N::Rt").load(dir)
-        .orderBy("id").collect()
-      assert(got.length == 3, s"vec=$vec")
-      assert(got(0).getSeq[Any](1) == Seq(1L, null, 3L), s"vec=$vec")
-      assert(got(0).getSeq[Any](2) == Seq(null, "b", ""), s"vec=$vec")
-      assert(got(0).getSeq[Any](3) == Seq(1.5, null), s"vec=$vec")
-      assert(got(0).getSeq[Any](4) == Seq(true, null), s"vec=$vec")
-      assert(got(0).getSeq[Any](5) == Seq(null, 7.toShort), s"vec=$vec")
-      assert(got(1).getSeq[Any](1) == Seq(null, null), s"vec=$vec")
-      assert(got(1).isNullAt(3), s"vec=$vec") // null COLUMN stays unset
-      assert(got(1).getSeq[Any](4) == Seq.empty, s"vec=$vec")
-      assert(got(2).getSeq[Any](1) == Seq(4L, 5L), s"vec=$vec")
-    }
+    val got = spark.read.format("lwes").schema(schema)
+      .option("eventName", "N::Rt").load(dir)
+      .orderBy("id").collect()
+    assert(got.length == 3)
+    assert(got(0).getSeq[Any](1) == Seq(1L, null, 3L))
+    assert(got(0).getSeq[Any](2) == Seq(null, "b", ""))
+    assert(got(0).getSeq[Any](3) == Seq(1.5, null))
+    assert(got(0).getSeq[Any](4) == Seq(true, null))
+    assert(got(0).getSeq[Any](5) == Seq(null, 7.toShort))
+    assert(got(1).getSeq[Any](1) == Seq(null, null))
+    assert(got(1).isNullAt(3)) // null COLUMN stays unset
+    assert(got(1).getSeq[Any](4) == Seq.empty)
+    assert(got(2).getSeq[Any](1) == Seq(4L, 5L))
   }
 
   test("widened element reads: both paths agree on every integral/float combo") {
     // r19 fast array fill regression net: wire element tokens read into
     // WIDER (and narrower) column element types must produce identical
-    // values on the direct child-vector path and the row path — the
-    // conversions mirror toCatalyst's truncating-long / widening-double
-    // rules, so parity is the contract
+    // values on the direct child-vector path and the ColumnShape
+    // reference decode — the conversions mirror toCatalyst's
+    // truncating-long / widening-double rules, so parity is the contract
     val dir = Files.createTempDirectory("narr-widen").toString
     val w = graft.lwes.JournalWriter.create(s"$dir/w.journal.gz")
     (0 until 64).foreach { i =>
@@ -96,13 +93,12 @@ class LwesNullableArraySpec extends AnyFunSuite {
     val schema = "id long, s16 array<long>, u16 array<long>, " +
       "i32 array<long>, u32 array<long>, u64 array<long>, " +
       "f32 array<double>, f64 array<double>"
-    val both = Seq("true", "false").map { vec =>
-      spark.read.format("lwes").schema(schema)
-        .option("vectorized", vec).option("eventName", "W::E").load(dir)
-        .orderBy("id").collect().map(_.toString).toSeq
-    }
-    assert(both(0) == both(1))
-    assert(both(0).length == 64)
+    val df = spark.read.format("lwes").schema(schema)
+      .option("eventName", "W::E").load(dir)
+    val got = df.orderBy("id").collect()
+    assert(got.sameElements(
+      graft.sources.lwes.ColumnShape.referenceRows(df).sortBy(_.getLong(0))))
+    assert(got.length == 64)
     // spot-check raw-bits uint64 and exact widen
     val r0 = spark.read.format("lwes").schema(schema)
       .option("eventName", "W::E").load(dir)
@@ -137,24 +133,21 @@ class LwesNullableArraySpec extends AnyFunSuite {
       .option("eventName", "Em::E").load(dir).schema
     assert(inferred("xs").dataType == ArrayType(IntegerType, containsNull = true))
     assert(inferred("tags").dataType == ArrayType(StringType, containsNull = true))
-    for (vec <- Seq("true", "false")) {
-      // projected read WITHOUT fat: exercises the nullable length-skip
-      val got = spark.read.format("lwes")
-        .schema("id long, xs array<int>, tags array<string>, tail int")
-        .option("vectorized", vec)
-        .option("eventName", "Em::E").load(dir)
-        .orderBy("id").collect()
-      assert(got.length == 50, s"vec=$vec")
-      got.foreach { r =>
-        val i = r.getLong(0).toInt
-        val xs = r.getSeq[Any](1)
-        assert(xs.length == i % 5, s"vec=$vec id=$i")
-        xs.zipWithIndex.foreach { case (x, j) =>
-          val e: Any = if ((i + j) % 3 == 0) null else i * 10 + j
-          assert(x == e, s"vec=$vec id=$i elem $j")
-        }
-        assert(r.getInt(3) == i * 7, s"vec=$vec id=$i tail")
+    // projected read WITHOUT fat: exercises the nullable length-skip
+    val got = spark.read.format("lwes")
+      .schema("id long, xs array<int>, tags array<string>, tail int")
+      .option("eventName", "Em::E").load(dir)
+      .orderBy("id").collect()
+    assert(got.length == 50)
+    got.foreach { r =>
+      val i = r.getLong(0).toInt
+      val xs = r.getSeq[Any](1)
+      assert(xs.length == i % 5, s"id=$i")
+      xs.zipWithIndex.foreach { case (x, j) =>
+        val e: Any = if ((i + j) % 3 == 0) null else i * 10 + j
+        assert(x == e, s"id=$i elem $j")
       }
+      assert(r.getInt(3) == i * 7, s"id=$i tail")
     }
   }
 
@@ -169,11 +162,9 @@ class LwesNullableArraySpec extends AnyFunSuite {
     val inferred = spark.read.format("lwes").option("eventName", "B::E")
       .load(dir).schema
     assert(inferred("bs").dataType == ArrayType(ShortType, containsNull = true))
-    for (vec <- Seq("true", "false")) {
-      val r = spark.read.format("lwes").schema("id long, bs array<short>")
-        .option("vectorized", vec).option("eventName", "B::E").load(dir).head()
-      assert(r.getSeq[Any](1) == Seq(5.toShort, null, (-7).toShort), s"vec=$vec")
-    }
+    val r = spark.read.format("lwes").schema("id long, bs array<short>")
+      .option("eventName", "B::E").load(dir).head()
+    assert(r.getSeq[Any](1) == Seq(5.toShort, null, (-7).toShort))
   }
 
   test("array<byte> columns take ONE wire shape per column, driven by containsNull") {
@@ -198,13 +189,11 @@ class LwesNullableArraySpec extends AnyFunSuite {
       .load(dir).schema
     assert(inferred("bs").dataType == ArrayType(ShortType, containsNull = true),
       s"got ${inferred("bs").dataType}")
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").schema("id long, bs array<short>")
-        .option("vectorized", vec).option("eventName", "BC::E").load(dir)
-        .orderBy("id").collect()
-      assert(got(0).getSeq[Any](1) == Seq(1.toShort, null, 3.toShort), s"vec=$vec")
-      assert(got(1).getSeq[Any](1) == Seq(4.toShort, 5.toShort), s"vec=$vec")
-    }
+    val got = spark.read.format("lwes").schema("id long, bs array<short>")
+      .option("eventName", "BC::E").load(dir)
+      .orderBy("id").collect()
+    assert(got(0).getSeq[Any](1) == Seq(1.toShort, null, 3.toShort))
+    assert(got(1).getSeq[Any](1) == Seq(4.toShort, 5.toShort))
     // a containsNull=false byte column keeps the classic blob shape
     val schema2 = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -302,19 +291,17 @@ class LwesNullableArraySpec extends AnyFunSuite {
     } finally r.close()
     assert(toks.contains(LwesType.NInt32Array))
     assert(toks.contains(LwesType.NInt64Array)) // default fill, nullable token
-    // read back with the template, both paths: values + default hole
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").option("eventName", "Nul::Ev")
-        .option("esf", esf).option("vectorized", vec).load(dir)
-        .select("id", "xs", "tags", "narrow", "filled")
-        .orderBy("id").collect()
-      assert(got(0).getSeq[Any](1) == Seq(7, null, 9), s"vec=$vec")
-      assert(got(0).getSeq[Any](2) == Seq(null, "a"), s"vec=$vec")
-      assert(got(0).getSeq[Any](3) == Seq(70000 - 65536, null), s"vec=$vec")
-      // the declared default (with its null hole) filled both rows
-      assert(got(0).getSeq[Any](4) == Seq(1L, null, 3L), s"vec=$vec")
-      assert(got(1).getSeq[Any](4) == Seq(1L, null, 3L), s"vec=$vec")
-    }
+    // read back with the template: values + default hole
+    val got = spark.read.format("lwes").option("eventName", "Nul::Ev")
+      .option("esf", esf).load(dir)
+      .select("id", "xs", "tags", "narrow", "filled")
+      .orderBy("id").collect()
+    assert(got(0).getSeq[Any](1) == Seq(7, null, 9))
+    assert(got(0).getSeq[Any](2) == Seq(null, "a"))
+    assert(got(0).getSeq[Any](3) == Seq(70000 - 65536, null))
+    // the declared default (with its null hole) filled both rows
+    assert(got(0).getSeq[Any](4) == Seq(1L, null, 3L))
+    assert(got(1).getSeq[Any](4) == Seq(1L, null, 3L))
   }
 
   test("esf: a null element under a NON-nullable declaration fails, named") {
@@ -402,11 +389,9 @@ class LwesNullableArraySpec extends AnyFunSuite {
     w.writeRecord(bad, 0, bad.length, 0L, Array[Byte](0, 0, 0, 0), 0, 0)
     w.write(LwesEvent("U::E").setInt64("id", 2L))
     w.close()
-    for (vec <- Seq("true", "false")) {
-      val got = spark.read.format("lwes").schema("id long")
-        .option("vectorized", vec).option("eventName", "U::E").load(dir)
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == Seq(1L, 2L), s"vec=$vec")
-    }
+    val got = spark.read.format("lwes").schema("id long")
+      .option("eventName", "U::E").load(dir)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == Seq(1L, 2L))
   }
 }

@@ -84,18 +84,15 @@ class LwesRuntimeSkipSpec extends AnyFunSuite {
     assert(mf.delete(), "batch commit should have published a manifest")
     new java.io.File(dir,
       s".${graft.sources.lwes.LwesStats.ManifestName}.crc").delete()
-    Seq("true", "false").foreach { vec =>
-      val q = joined(fact(dir,
-        LwesOptions.StatsPruneMaxFiles -> "0", "vectorized" -> vec))
-      val rows = q.collect()
-      val plan = q.queryExecution.executedPlan
-      assert(LwesScan.scansIn(plan).map(_.statsPrunedFileCount).sum == 0L,
-        "over the cap the DRIVER must not have pruned")
-      assert(LwesScan.scanMetricSum(plan, "filesPrunedByStats") >= 12L,
-        s"executor skim must drop the non-matching files (vectorized=$vec)")
-      val plain = joined(fact(dir, LwesOptions.StatsPrune -> "false")).collect()
-      assert(rows.sameElements(plain))
-    }
+    val q = joined(fact(dir, LwesOptions.StatsPruneMaxFiles -> "0"))
+    val rows = q.collect()
+    val plan = q.queryExecution.executedPlan
+    assert(LwesScan.scansIn(plan).map(_.statsPrunedFileCount).sum == 0L,
+      "over the cap the DRIVER must not have pruned")
+    assert(LwesScan.scanMetricSum(plan, "filesPrunedByStats") >= 12L,
+      "executor skim must drop the non-matching files")
+    val plain = joined(fact(dir, LwesOptions.StatsPrune -> "false")).collect()
+    assert(rows.sameElements(plain))
   }
 
   test("runtime filters short-circuit records inside the parse") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.lwes.{JournalWriter, LwesEvent}
+import graft.sources.lwes.ColumnShape
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -130,7 +131,7 @@ class LwesSourceSpec extends AnyFunSuite {
         Array[Byte](i.toByte, (i + 1).toByte, 7))
     }.toDF("id", "nums", "tags", "vals", "blob").coalesce(1)
       .write.format("lwes").option("eventName", "Arr::E").mode("append").save(dir)
-    // row-path read with explicit array schema
+    // read with explicit array schema
     val back = spark.read.format("lwes")
       .schema("id long, nums array<int>, tags array<string>, vals array<double>, blob binary")
       .option("eventName", "Arr::E").load(dir)
@@ -160,9 +161,13 @@ class LwesSourceSpec extends AnyFunSuite {
     assert(scalarDf.agg(sum("id")).collect().head.getLong(0) == (0 until 5000).map(_.toLong).sum)
     // array-projecting scans are vectorized too (r15: elements append
     // to the child vector, explicit per-row offsets) and must be
-    // BIT-IDENTICAL to the row reader across every array column
+    // BIT-IDENTICAL to the reference decode across every array column;
+    // `tag_bytes` reads the string[] attribute as array<binary> (UTF-8
+    // bytes per element)
     val arrDf = spark.read.format("lwes")
-      .schema("id long, nums array<int>, tags array<string>, vals array<double>, blob binary")
+      .schema("id long, nums array<int>, tags array<string>, vals array<double>, " +
+        "blob binary, tag_bytes array<binary>")
+      .option("mapping", "tag_bytes:tags")
       .option("eventName", "Arr::E").load(dir)
     val arrScan = arrDf.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
@@ -170,14 +175,17 @@ class LwesSourceSpec extends AnyFunSuite {
     assert(arrScan.supportsColumnar, "array schemas take the vectorized path (r15)")
     val colRows = arrDf.orderBy("id").collect()
     assert(colRows.length == 5000)
+    assert(colRows(5).getSeq[Array[Byte]](5).map(_.toSeq) ==
+      Seq("t5".getBytes("UTF-8").toSeq, "x".getBytes("UTF-8").toSeq))
     def canon(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getSeq[Int](1), r.getSeq[String](2),
-        r.getSeq[Double](3), r.getAs[Array[Byte]](4).toSeq)
-    assert(colRows.map(canon).toSeq == back.map(canon).toSeq,
-      "columnar array read must equal the row-path read bit-for-bit")
+        r.getSeq[Double](3), r.getAs[Array[Byte]](4).toSeq,
+        r.getSeq[Array[Byte]](5).map(_.toSeq))
+    assert(colRows.map(canon).toSeq ==
+      ColumnShape.referenceRows(arrDf).map(canon).sortBy(_._1),
+      "columnar array read must equal the reference decode bit-for-bit")
     // decimal-element arrays are vectorized too since r16 (appended
-    // with putDecimal's own width split) — no schema shape the source
-    // can produce drags a mixed scan onto the row reader anymore
+    // with putDecimal's own width split)
     val decDf = spark.read.format("lwes")
       .schema("id long, nums array<decimal(20,0)>")
       .option("eventName", "Arr::E").load(dir)
@@ -185,12 +193,9 @@ class LwesSourceSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }.head
     assert(decScan.supportsColumnar, "decimal-element arrays are vectorized (r16)")
-    val decRow = spark.read.format("lwes")
-      .schema("id long, nums array<decimal(20,0)>")
-      .option("eventName", "Arr::E").option("vectorized", "false").load(dir)
     assert(decDf.orderBy("id").collect()
-      .sameElements(decRow.orderBy("id").collect()),
-      "columnar decimal-array read must equal the row-path read bit-for-bit")
+      .sameElements(ColumnShape.referenceRows(decDf).sortBy(_.getLong(0))),
+      "columnar decimal-array read must equal the reference decode bit-for-bit")
   }
 
   test("bool array elements read into float/double columns: vectorized = row path (NULL)") {
@@ -203,37 +208,50 @@ class LwesSourceSpec extends AnyFunSuite {
     }.toDF("id", "flags", "nflags").coalesce(1)
       .write.format("lwes").option("eventName", "BoolArr::E")
       .mode("append").save(dir)
-    // scalar Bool -> double is NULL on both readers (toCatalyst's
-    // asDouble has no Boolean case; the columnar ColWriter mirrors it);
-    // the ARRAY element conversion must agree on both paths too
-    def read(vectorized: Boolean) = spark.read.format("lwes")
-      .schema("id long, flags array<double>, nflags array<float>")
-      .option("eventName", "BoolArr::E")
-      .option("vectorized", vectorized.toString).load(dir)
-      .orderBy("id").collect()
+    // scalar Bool -> double is NULL (toCatalyst's asDouble has no
+    // Boolean case; the columnar ColWriter mirrors it); the ARRAY element
+    // conversion must agree with the reference decode too
+    def canon(rows: Seq[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0),
         Option(r.getSeq[Any](1)).map(_.toList),
         Option(r.getSeq[Any](2)).map(_.toList)))
-      .toSeq
-    val col = read(vectorized = true)
-    val row = read(vectorized = false)
-    assert(col == row,
-      "bool-array -> float/double column must be identical on the " +
-        "vectorized and row paths")
+      .sortBy(_._1)
+    val df = spark.read.format("lwes")
+      .schema("id long, flags array<double>, nflags array<float>")
+      .option("eventName", "BoolArr::E").load(dir)
+    val col = canon(df.collect().toSeq)
+    assert(col == canon(ColumnShape.referenceRows(df)),
+      "bool-array -> float/double column must be identical in the " +
+        "vectorized and reference decodes")
     // and the agreed-on semantics is NULL elements, like the scalar read
     assert(col.head._2.get.forall(_ == null))
     assert(col.head._3.get.forall(_ == null))
-    // bool -> integral element reads keep the asLong 1/0 semantics on
-    // both paths (regression guard for the fix's scope)
-    def readInts(vectorized: Boolean) = spark.read.format("lwes")
+    // bool -> integral element reads keep the asLong 1/0 semantics in
+    // both decodes (regression guard for the fix's scope)
+    def ints(rows: Seq[org.apache.spark.sql.Row]) = rows
+      .map(r => (r.getLong(0), r.getSeq[Any](1).toList)).sortBy(_._1)
+    val intDf = spark.read.format("lwes")
       .schema("id long, flags array<int>")
-      .option("eventName", "BoolArr::E")
-      .option("vectorized", vectorized.toString).load(dir)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Any](1).toList)).toSeq
-    val ci = readInts(vectorized = true)
-    assert(ci == readInts(vectorized = false))
+      .option("eventName", "BoolArr::E").load(dir)
+    val ci = ints(intDf.collect().toSeq)
+    assert(ci == ints(ColumnShape.referenceRows(intDf)))
     assert(ci.head._2 == List(1, 0) || ci.head._2 == List(1, 1))
+  }
+
+  test("array columns over element types no wire array fills are refused by name") {
+    val dir = tmp()
+    val w = JournalWriter.create(s"$dir/a.gz")
+    w.write(LwesEvent("Arr::N").setInt64("id", 1L).setInt32Array("nums", Array(1, 2)))
+    w.close()
+    for (dt <- Seq("array<array<int>>", "array<map<string,int>>",
+        "array<struct<a:int>>", "array<tinyint>")) {
+      val df = spark.read.format("lwes").schema(s"id long, nums $dt").load(dir)
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.collect())
+      assert(e.getMessage.contains("nums") &&
+        e.getMessage.contains(DataType.fromDDL(dt).sql), e.getMessage)
+      // a scan that does not project the column is unaffected
+      assert(df.select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    }
   }
 
   test("write via DataFrame then read back round-trips (A3, A10)") {
@@ -325,44 +343,33 @@ class LwesSourceSpec extends AnyFunSuite {
   test("pushed attribute predicates short-circuit the parse, results identical") {
     val dir = tmp()
     writeMixedJournal(dir, 900)
-    def read(vec: Boolean) = spark.read.format("lwes")
+    def read() = spark.read.format("lwes")
       .schema("id long, page string, score int, bot boolean, cost double, " +
-        "ReceiptTime long")
-      .option("vectorized", vec.toString).load(dir)
+        "ReceiptTime long").load(dir)
     // the filters land in the scan's pushed set
-    val q = read(vec = true)
+    val q = read()
       .filter(col("score") > 800 && col("page") === "/p/3" && col("cost") < 224.0)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThan(score,800)") &&
       plan.contains("EqualTo(page,/p/3)"),
       s"attr predicates missing from pushed filters:\n$plan")
-    // identical results: vectorized in-parse evaluation vs the row
-    // path's pre-materialization evaluation (r15 — both drop
-    // non-matching records inside the scan now)
-    def got(vec: Boolean) = read(vec).filter(
-        col("score") > 800 && col("page") === "/p/3" && col("cost") < 224.0)
-      .orderBy("id").collect()
-    val a = got(true)
-    val b = got(false)
-    assert(a.sameElements(b))
-    // the ROW reader's rejection is visible in the scan metric too —
-    // the filter work happened in the parser, not in Spark's residual
-    val rq = read(vec = false)
-      .filter(col("score") > 800 && col("page") === "/p/3" && col("cost") < 224.0)
-      .agg(count(lit(1)))
+    val a = q.orderBy("id").collect()
+    // the rejection is visible in the scan metric too — the filter
+    // work happened in the parser, not in Spark's residual
+    val rq = q.agg(count(lit(1)))
     rq.collect()
     val nf = graft.sources.lwes.LwesScan
       .scanMetricSum(rq.queryExecution.executedPlan, "rowsFiltered")
-    assert(nf > 0, s"row-path rowsFiltered = $nf, expected > 0")
+    assert(nf > 0, s"rowsFiltered = $nf, expected > 0")
     assert(a.map(_.getLong(0)).toSeq ==
       (801 until 900).filter(i => i % 10 == 3 && i * 0.25 < 224.0).map(_.toLong))
     // header-injected column predicates only fire AFTER the header
     // overwrite (payload carries no ReceiptTime attr here, the header
     // does): equality on ReceiptTime must still match
-    val hdr = read(vec = true).filter(col("ReceiptTime") === 1700000000123L)
+    val hdr = read().filter(col("ReceiptTime") === 1700000000123L)
     assert(hdr.collect().map(_.getLong(0)).toSeq == Seq(123L))
     // missing-attr null semantics: a filter on a sometimes-absent attr
-    // drops rows without it, identically in both paths
+    // drops rows without it
     val dir2 = tmp()
     val w = JournalWriter.create(s"$dir2/m.gz")
     (0 until 50).foreach { i =>
@@ -371,70 +378,57 @@ class LwesSourceSpec extends AnyFunSuite {
       w.write(ev)
     }
     w.close()
-    def got2(vec: Boolean) = spark.read.format("lwes")
-      .schema("id long, opt int").option("vectorized", vec.toString)
+    val got2 = spark.read.format("lwes").schema("id long, opt int")
       .load(dir2).filter(col("opt") >= 20).orderBy("id").collect()
-    assert(got2(true).sameElements(got2(false)))
-    assert(got2(true).map(_.getLong(0)).toSeq == Seq(20L, 25L, 30L, 35L, 40L, 45L))
+    assert(got2.map(_.getLong(0)).toSeq == Seq(20L, 25L, 30L, 35L, 40L, 45L))
   }
 
   test("pushed string ranges, LIKE-prefix, and IN short-circuit the parse (r16)") {
     val dir = tmp()
     writeMixedJournal(dir, 900)
-    def read(vec: Boolean) = spark.read.format("lwes")
-      .schema("id long, page string, score int, cost double")
-      .option("vectorized", vec.toString).load(dir)
+    def read() = spark.read.format("lwes")
+      .schema("id long, page string, score int, cost double").load(dir)
     def flt(df: org.apache.spark.sql.DataFrame) = df.filter(
       col("page").startsWith("/p/") &&
         col("page") >= "/p/3" && col("page") <= "/p/7" &&
         col("page").isin("/p/4", "/p/6", "/p/9") &&
         col("score").isin(84, 126, 446, 555))
     // the new shapes land in the scan's pushed set
-    val plan = flt(read(vec = true)).queryExecution.executedPlan.toString
+    val plan = flt(read()).queryExecution.executedPlan.toString
     assert(plan.contains("StringStartsWith(page,/p/)") &&
       plan.contains("In(page") && plan.contains("In(score") &&
       plan.contains("GreaterThanOrEqual(page,/p/3)"),
       s"string/In predicates missing from pushed filters:\n$plan")
-    // identical results across both reader paths
-    val a = flt(read(vec = true)).orderBy("id").collect()
-    val b = flt(read(vec = false)).orderBy("id").collect()
-    assert(a.sameElements(b))
+    val a = flt(read()).orderBy("id").collect()
     assert(a.map(_.getLong(0)).toSeq == Seq(84L, 126L, 446L))
-    // and the rejection happened IN the parser on both paths
-    for (vec <- Seq(true, false)) {
-      val q = flt(read(vec)).agg(count(lit(1)))
-      q.collect()
-      val nf = graft.sources.lwes.LwesScan
-        .scanMetricSum(q.queryExecution.executedPlan, "rowsFiltered")
-      assert(nf > 0, s"vectorized=$vec rowsFiltered = $nf, expected > 0")
-    }
+    // and the rejection happened IN the parser
+    val q = flt(read()).agg(count(lit(1)))
+    q.collect()
+    val nf = graft.sources.lwes.LwesScan
+      .scanMetricSum(q.queryExecution.executedPlan, "rowsFiltered")
+    assert(nf > 0, s"rowsFiltered = $nf, expected > 0")
   }
 
   test("pushed LIKE '%x%' / LIKE '%x' short-circuit the parse (r18)") {
     val dir = tmp()
     writeMixedJournal(dir, 900)
-    def read(vec: Boolean) = spark.read.format("lwes")
-      .schema("id long, page string, score int, cost double")
-      .option("vectorized", vec.toString).load(dir)
+    def read() = spark.read.format("lwes")
+      .schema("id long, page string, score int, cost double").load(dir)
     def flt(df: org.apache.spark.sql.DataFrame) = df.filter(
       col("page").contains("p/4") && col("page").endsWith("/4"))
-    val plan = flt(read(vec = true)).queryExecution.executedPlan.toString
+    val plan = flt(read()).queryExecution.executedPlan.toString
     assert(plan.contains("StringContains(page,p/4)") &&
       plan.contains("StringEndsWith(page,/4)"),
       s"contains/endsWith missing from pushed filters:\n$plan")
-    val a = flt(read(vec = true)).orderBy("id").collect()
-    val b = flt(read(vec = false)).orderBy("id").collect()
-    assert(a.sameElements(b))
+    val a = flt(read()).orderBy("id").collect()
     // pages are /p/0../p/9 — only /p/4 survives both probes
     assert(a.nonEmpty && a.map(_.getLong(0)).forall(_ % 10 == 4))
     assert(a.length == 90, s"expected 90 /p/4 rows, got ${a.length}")
-    for (vec <- Seq(true, false)) {
-      val q = flt(read(vec)).agg(count(lit(1)))
-      q.collect()
-      val nf = graft.sources.lwes.LwesScan
-        .scanMetricSum(q.queryExecution.executedPlan, "rowsFiltered")
-      assert(nf > 0, s"vectorized=$vec rowsFiltered = $nf, expected > 0")
-    }
+    val q = flt(read()).agg(count(lit(1)))
+    q.collect()
+    val nf = graft.sources.lwes.LwesScan
+      .scanMetricSum(q.queryExecution.executedPlan, "rowsFiltered")
+    assert(nf > 0, s"rowsFiltered = $nf, expected > 0")
   }
 
   test("partitioned dt= layout yields partition column (A14)") {

@@ -123,7 +123,7 @@ class LwesSplitSpec extends AnyFunSuite {
       LwesReadConfig(
         org.apache.spark.sql.types.StructType.fromDDL(
           "id long, ReceiptTime long, tag string"),
-        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None, columnar = false),
+        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None),
       Seq(dir), checkpointLocation = ckpt,
       splitTargetBytes = Some(4096L))
     val end = stream.latestOffset()
@@ -185,7 +185,7 @@ class LwesSplitSpec extends AnyFunSuite {
       LwesReadConfig(
         org.apache.spark.sql.types.StructType.fromDDL(
           "id long, ReceiptTime long, tag string"),
-        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None, columnar = false),
+        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None),
       Seq(dir), checkpointLocation = ckpt,
       timeLo = lo, timeHi = hi,
       splitTargetBytes = Some(4096L))
@@ -226,7 +226,7 @@ class LwesSplitSpec extends AnyFunSuite {
       LwesReadConfig(
         org.apache.spark.sql.types.StructType.fromDDL(
           "id long, ReceiptTime long, tag string"),
-        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None, columnar = false),
+        Map.empty, Map.empty, Set("Sp::E"), Nil, -1, None),
       Seq(dir), checkpointLocation = ckpt,
       timeLo = lo, timeHi = hi, splitTargetBytes = Some(4096L))
     def spans(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =

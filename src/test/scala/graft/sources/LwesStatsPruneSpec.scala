@@ -531,20 +531,16 @@ class LwesStatsPruneSpec extends AnyFunSuite {
     // cap 0 < 3 candidates: the driver plans every file (no sidecar
     // wave, statsPrunedFileCount stays 0) and each task skims its own
     // files — same files skipped, reported under the same metric name
-    def q(vec: String) = rd(dir,
-      LwesOptions.StatsPruneMaxFiles -> "0", "vectorized" -> vec)
+    val df = rd(dir, LwesOptions.StatsPruneMaxFiles -> "0")
       .filter(col("id") < 0)
-    Seq("true", "false").foreach { vec =>
-      val df = q(vec)
-      assert(df.collect().isEmpty)
-      assert(LwesScan.scansIn(df.queryExecution.executedPlan)
-        .map(_.statsPrunedFileCount).sum == 0L,
-        "over the cap the DRIVER must not have pruned")
-      assert(LwesScan.scanMetricSum(df.queryExecution.executedPlan,
-        "filesPrunedByStats") == 3L, s"executor skim (vectorized=$vec)")
-      assert(LwesScan.scanMetricSum(df.queryExecution.executedPlan,
-        "eventsParsed") == 0L)
-    }
+    assert(df.collect().isEmpty)
+    assert(LwesScan.scansIn(df.queryExecution.executedPlan)
+      .map(_.statsPrunedFileCount).sum == 0L,
+      "over the cap the DRIVER must not have pruned")
+    assert(LwesScan.scanMetricSum(df.queryExecution.executedPlan,
+      "filesPrunedByStats") == 3L, "executor skim")
+    assert(LwesScan.scanMetricSum(df.queryExecution.executedPlan,
+      "eventsParsed") == 0L)
     // partial skims keep surviving files readable: answers match the
     // plan-time-pruned and the unpruned reads exactly
     val capped = rd(dir, LwesOptions.StatsPruneMaxFiles -> "0")

@@ -418,6 +418,23 @@ class LwesStreamingSpec extends AnyFunSuite {
     f.seek(f.length()); f.write(Array[Byte](0, 99, 1, 2, 3)); f.close()
     val df = spark.read.format("lwes").schema("id long, amount int").load(dir)
     assert(df.count() == 80) // 50 + 30 survive, torn tail skipped
+    // a micro-batch runs the same columnar decoder and counts the tear
+    val q = spark.readStream.format("lwes").schema("id long, amount int")
+      .load(dir).writeStream.format("memory").queryName("lwes_torn")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("lwes_torn").count() == 80)
+      val plan = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      assert(plan.toString.contains("ColumnarToRow"), plan.toString)
+      val torn = plan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec =>
+          m.metrics("tornFiles").value
+      }.sum
+      assert(torn == 1L, s"tornFiles = $torn")
+    } finally q.stop()
   }
 
   test("Trigger.AvailableNow drains the backlog in bounded batches and terminates") {

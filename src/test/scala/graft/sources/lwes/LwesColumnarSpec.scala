@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Vectorized scan output (A-surface scale polish): batches of events
   * land in ColumnarBatch vectors and Spark converts via codegen'd
-  * ColumnarToRow; results must be bit-identical to the row path across
-  * every type the wire format can carry.
+  * ColumnarToRow; results must be bit-identical to the [[ColumnShape]]
+  * reference decode across every type the wire format can carry. Test
+  * names that say "row path" or "both paths" predate the single decoder:
+  * the row path they name is now that reference.
   */
 class LwesColumnarSpec extends AnyFunSuite {
 
@@ -48,21 +50,24 @@ class LwesColumnarSpec extends AnyFunSuite {
     "id long, i32 int, i16 short, u16 int, u32 long, u64 decimal(20,0), " +
       "flag boolean, cost double, ip string, opt string, ReceiptTime long"
 
+  /** Reference rows of a plain read, in `orderBy("id")` order (column
+    * 0, nulls first). */
+  private def reference(df: org.apache.spark.sql.DataFrame) = ColumnShape
+    .referenceRows(df).sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    .toArray
+
   test("columnar scan is active and matches the row path on every type") {
     val dir = Files.createTempDirectory("lwes-col").toString
     writeJournal(dir, 3, 400)
-    def read(vectorized: Boolean) = spark.read.format("lwes")
-      .schema(schemaDdl).option("uint64As", "decimal")
-      .option("vectorized", vectorized.toString).load(dir)
-    // the default plan really takes the columnar path
-    val plan = read(vectorized = true).queryExecution.executedPlan.toString
+    val df = spark.read.format("lwes")
+      .schema(schemaDdl).option("uint64As", "decimal").load(dir)
+    // the plan really takes the columnar path
+    val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
       s"expected ColumnarToRow in the plan:\n$plan")
-    val rowPlan = read(vectorized = false).queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"), "vectorized=false must be row-based")
     // bit-identical outputs, nulls included
-    val a = read(vectorized = true).orderBy("id").collect()
-    val b = read(vectorized = false).orderBy("id").collect()
+    val a = df.orderBy("id").collect()
+    val b = reference(df)
     assert(a.length == 1200 && a.sameElements(b))
     // spot-check semantics survived the vector writes
     val r = a(10) // id 10: % 5 == 0 -> opt null; % 4 != 0 -> Col::B
@@ -113,12 +118,10 @@ class LwesColumnarSpec extends AnyFunSuite {
         Array[Byte](0, 0, 0, 0), 0, 0)
     }
     w.close()
-    def read(v: Boolean) = spark.read.format("lwes")
-      .schema("id long, s string, ok string")
-      .option("vectorized", v.toString).load(dir)
-    val a = read(v = true).orderBy("id").collect()
-    val b = read(v = false).orderBy("id").collect()
-    assert(a.length == 50 && a.sameElements(b))
+    val df = spark.read.format("lwes")
+      .schema("id long, s string, ok string").load(dir)
+    val a = df.orderBy("id").collect()
+    assert(a.length == 50 && a.sameElements(reference(df)))
     assert(a(1).getString(1) == "ZZZZZZ")
     // malformed bytes surface as the JVM's replacement-char decode
     assert(a(0).getString(1) ==
@@ -126,9 +129,8 @@ class LwesColumnarSpec extends AnyFunSuite {
     assert(a(0).getString(2) == "héllo→世界")
     // non-ASCII equality can't early-check (StrEqEarly defers) but the
     // post check over the finished vectors must still be exact
-    assert(read(v = true)
-      .filter(col("ok") === "héllo→世界").count() == 50)
-    assert(read(v = true).filter(col("ok") === "héllo").count() == 0)
+    assert(df.filter(col("ok") === "héllo→世界").count() == 50)
+    assert(df.filter(col("ok") === "héllo").count() == 0)
   }
 
   test("invalid-UTF-8 EVENT NAMES filter identically in both paths") {
@@ -142,7 +144,7 @@ class LwesColumnarSpec extends AnyFunSuite {
       if (i % 2 == 0) {
         // patch the name's trailing "AB" (payload offset 1 + 5) to a
         // stray 0xFF + lone continuation 0x80 — invalid UTF-8 that the
-        // row path DECODES (two replacement chars) before comparing
+        // reference DECODES (two replacement chars) before comparing
         payload(6) = 0xFF.toByte
         payload(7) = 0x80.toByte
       }
@@ -151,19 +153,17 @@ class LwesColumnarSpec extends AnyFunSuite {
     }
     w.close()
     val decodedBad = "Col::��"
-    def read(v: Boolean, name: String) = spark.read.format("lwes")
-      .schema("id long").option("eventName", name)
-      .option("vectorized", v.toString).load(dir)
+    def read(name: String) = spark.read.format("lwes")
+      .schema("id long").option("eventName", name).load(dir)
     // a name that only matches after UTF-8 decode: the columnar byte
-    // compare misses, the non-ASCII fallback must recover row parity
-    val a = read(v = true, decodedBad).orderBy("id").collect().map(_.getLong(0))
-    val b = read(v = false, decodedBad).orderBy("id").collect().map(_.getLong(0))
+    // compare misses, the non-ASCII fallback must recover the reference
+    val a = read(decodedBad).orderBy("id").collect().map(_.getLong(0))
+    val b = reference(read(decodedBad)).map(_.getLong(0))
     assert(a.toSeq == (0 until 30 by 2).map(_.toLong))
     assert(a.sameElements(b))
     // pure-ASCII names stay on the fast byte path
-    assert(read(v = true, "Col::OK").count() ==
-      read(v = false, "Col::OK").count())
-    assert(read(v = true, "Col::OK").count() == 15)
+    assert(read("Col::OK").count() == reference(read("Col::OK")).length)
+    assert(read("Col::OK").count() == 15)
   }
 
   test("corruption resync and torn tails behave identically in both paths") {
@@ -183,12 +183,10 @@ class LwesColumnarSpec extends AnyFunSuite {
     val raf = new java.io.RandomAccessFile(path, "rw")
     raf.setLength(raf.length() - 7) // tear mid-payload of the last record
     raf.close()
-    def read(v: Boolean) = spark.read.format("lwes")
-      .schema("id long, s string").option("eventName", "Col::T")
-      .option("vectorized", v.toString).load(dir)
-    val a = read(v = true).orderBy("id").collect()
-    val b = read(v = false).orderBy("id").collect()
-    assert(a.sameElements(b))
+    val df = spark.read.format("lwes")
+      .schema("id long, s string").option("eventName", "Col::T").load(dir)
+    val a = df.orderBy("id").collect()
+    assert(a.sameElements(reference(df)))
     // only the torn final record is lost; garbage cost no good rows
     assert(a.length == 299 && a.map(_.getLong(0)).toSeq == (0L until 299L))
   }
@@ -232,20 +230,20 @@ class LwesColumnarSpec extends AnyFunSuite {
         new BytesWritable(framed))
     }
     writers.foreach(_.close())
-    def read(v: Boolean) = spark.read.format("lwes").schema(schemaDdl)
-      .option("uint64As", "decimal").option("vectorized", v.toString).load(dir)
-    val a = read(v = true).orderBy("id").collect()
-    val b = read(v = false).orderBy("id").collect()
+    val df = spark.read.format("lwes").schema(schemaDdl)
+      .option("uint64As", "decimal").load(dir)
+    val a = df.orderBy("id").collect()
+    val b = reference(df)
     assert(a.length == 300 && a.sameElements(b))
     // SEQ has no journal frame header, and header-mapped columns are
-    // header-derived in both paths -> NULL for SEQ (row-path parity)
+    // header-derived in both decodes -> NULL for SEQ
     assert(a(5).isNullAt(10) && b(5).isNullAt(10))
     // sometimes-missing attr is null in both
     assert(a(0).isNullAt(9) && b(0).isNullAt(9))
     // eventName filter applies on the wire bytes
-    assert(read(v = true).where("id % 4 = 0").count() ==
+    assert(df.where("id % 4 = 0").count() ==
       spark.read.format("lwes").schema(schemaDdl).option("uint64As", "decimal")
-        .option("eventName", "Col::A").option("vectorized", "true").load(dir)
+        .option("eventName", "Col::A").load(dir)
         .count())
   }
 
@@ -264,16 +262,14 @@ class LwesColumnarSpec extends AnyFunSuite {
     w.close()
     val ddl = "id long, u64 decimal(20,0), us array<decimal(20,0)>, " +
       "is array<int>, opt_us array<decimal(20,0)>"
-    def read(v: Boolean) = spark.read.format("lwes").schema(ddl)
-      .option("uint64As", "decimal").option("vectorized", v.toString).load(dir)
-    // the uint64As=decimal + uint64[] schema STAYS on the columnar path
-    // (the exact mixed-schema shape that used to fall back to rows)
-    val plan = read(v = true).queryExecution.executedPlan.toString
+    val df = spark.read.format("lwes").schema(ddl)
+      .option("uint64As", "decimal").load(dir)
+    // the uint64As=decimal + uint64[] schema rides the columnar path
+    val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
       s"decimal-element arrays must ride the vectorized scan:\n$plan")
-    val a = read(v = true).orderBy("id").collect()
-    val b = read(v = false).orderBy("id").collect()
-    assert(a.length == 5000 && a.sameElements(b))
+    val a = df.orderBy("id").collect()
+    assert(a.length == 5000 && a.sameElements(reference(df)))
     // unsigned-exact element values, 2^63..2^64-1 range included
     val r = a(3)
     assert(r.getSeq[java.math.BigDecimal](2).map(_.toString) == Seq(
