@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
@@ -331,10 +332,13 @@ object SignatureExpressions {
 
   /** `round_half_up(double, scale)` → double: Spark `round(x, scale)`
     * for DoubleType, bit-identically (see [[roundHalfUpEval]]), without
-    * the per-row Double.toString + decimal parse on the fast path. */
+    * the per-row Double.toString + decimal parse on the fast path. A
+    * non-double child fails analysis (DATATYPE_MISMATCH) instead of
+    * throwing a ClassCastException per row. */
   case class RoundHalfUp(child: Expression, scale: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with ExpectsInputTypes {
     require(scale >= 0 && scale <= 15, s"scale $scale out of range")
+    override def inputTypes = Seq(DoubleType)
     override def dataType: DataType = DoubleType
     private val pow: Double = math.pow(10, scale)
     override def nullSafeEval(input: Any): Any =
@@ -348,9 +352,19 @@ object SignatureExpressions {
   }
 
   /** `band_signatures(array<long>, bands, r)` → array<long>: the LSH
-    * band hashes in one pass (see [[bandSignaturesEval]]). */
+    * band hashes in one pass (see [[bandSignaturesEval]]). A child that
+    * is not `array<long>`, or `bands`/`r` below 1, fails analysis
+    * (DATATYPE_MISMATCH). */
   case class BandSignatures(child: Expression, bands: Int, r: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Seq(ArrayType(LongType))
+    override def checkInputDataTypes(): TypeCheckResult =
+      Seq("bands" -> bands, "r" -> r).find(_._2 <= 0) match {
+        case Some((name, v)) => TypeCheckResult.DataTypeMismatch(
+          "VALUE_OUT_OF_RANGE", Map("exprName" -> s"`$name`",
+            "valueRange" -> s"[1, ${Int.MaxValue}]", "currentValue" -> v.toString))
+        case None => super.checkInputDataTypes()
+      }
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(input: Any): Any =
       bandSignaturesEval(input.asInstanceOf[ArrayData], bands, r)

@@ -76,9 +76,10 @@ object H264 {
       }
       v
     }
-    /** Up to 56 bits MSB-first WITHOUT consuming — the fixed-width
-      * VLC decode window. Caller must ensure n <= bitsLeft. */
+    /** Up to 32 bits (the Int result) MSB-first WITHOUT consuming — the
+      * fixed-width VLC decode window. Caller must ensure n <= bitsLeft. */
     def peek(n: Int): Int = {
+      require(n <= 32)
       var v = 0L
       var bp = pos >> 3
       val need = (pos & 7) + n

@@ -33,14 +33,15 @@ class LwesAggReaderFactory(config: LwesReadConfig, spec: LwesAggSpec,
   * all-COUNT(*) pushes from the sidecar's per-name counts.
   *
   * Three paths, chosen PER FILE:
-  *   - **File metadata** (A26×A27): an ungated scan (no event-name
-  *     filter, no receipt window, no ESF defaults) over a whole-file
-  *     slice whose zone-map sidecar — plus, for ReceiptTime-backed
-  *     MIN/MAX, the writer's exact `.t` name tag — answers EVERY pushed
-  *     function exactly ([[LwesStats.answerAggregates]]) never opens
-  *     the journal at all: any codec, attribute MIN/MAX/COUNT(col)
-  *     included. Counted by the `filesAggFromStats` metric;
-  *     `eventsParsed` stays 0.
+  *   - **File metadata** (A26×A27): a scan without a receipt window
+  *     or ESF defaults, over a whole-file slice whose zone-map sidecar
+  *     — plus, for ReceiptTime-backed MIN/MAX, the writer's exact `.t`
+  *     name tag — answers EVERY pushed function exactly
+  *     ([[LwesStats.answerAggregates]]), never opens the journal at
+  *     all: any codec, attribute MIN/MAX/COUNT(col) included. Under an
+  *     event-name filter the sidecar must also prove the file name-pure
+  *     ([[LwesStats.namePure]]). Counted by the `filesAggFromStats`
+  *     metric; `eventsParsed` stays 0.
   *   - **Footer**: when `spec.footerOnly` and the file is a `.zsj`
   *     split journal with a valid footer index, COUNT(*) sums the
   *     per-frame record counts and MIN/MAX over a LongType ReceiptTime
@@ -51,8 +52,9 @@ class LwesAggReaderFactory(config: LwesReadConfig, spec: LwesAggSpec,
   *     contributes records to the count but nothing to min/max (those
   *     records' receipt column is NULL, which min/max ignore).
   *   - **Stream**: everything else (sidecar-less gzip journals,
-  *     torn/footerless `.zsj`, event-name-filtered or time-windowed
-  *     scans, float/string attribute bounds) drains the same
+  *     torn/footerless `.zsj`, time-windowed scans, files holding
+  *     records an event-name filter drops or whose name counts are
+  *     unproven, float/string attribute bounds) drains the same
   *     [[LwesColumnarBatchReader]] an unpushed scan runs, projected to
   *     just the aggregated columns, and folds its rows into accumulators
   *     — identical admission semantics (torn-tail tolerance, resync, ESF
@@ -196,11 +198,15 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
 
   // A27 sidecar answering is sound only when the whole file is
   // admitted as-is: no record-level gate may drop or reshape records
-  // the sidecar counted. (Spark offers aggregates only with zero data
-  // filters pushed; the attrFilters guard is belt-and-braces.)
+  // the sidecar counted. Receipt windows and ESF defaults rule it out
+  // scan-wide; an event-name filter is decided per file or frame by
+  // `pure` (LwesStats.namePure). (Spark offers aggregates only with
+  // zero data filters pushed; the attrFilters guard is belt-and-braces.)
   private val sidecarEligible = spec.ungated &&
-    config.eventNames.isEmpty && config.esfDefaults.isEmpty &&
-    config.attrFilters.isEmpty
+    config.esfDefaults.isEmpty && config.attrFilters.isEmpty
+  private val funcCols = spec.funcs.flatMap(_.col)
+  private def pure(st: LwesStats.FileStats): Boolean =
+    config.namePure(st, funcCols)
   // columns not backed by a wire attribute: the sidecar cannot speak
   // for them (partition values / the event-name column are never null)
   private val nonAttrCols: Set[String] =
@@ -266,12 +272,14 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
     * skipped when the functions are receipt-bounds-only — except under
     * a grouping, where the record count decides whether the file's
     * group EXISTS (GROUP BY over zero rows emits zero groups, so an
-    * empty journal must contribute nothing — not a null-bound group). */
+    * empty journal must contribute nothing — not a null-bound group),
+    * and under an event-name filter, where only the sidecar's name
+    * counts can prove the file pure. */
   private def trySidecar(slice: LwesInputPartition): Option[Unit] = {
     if (!sidecarEligible || slice.range.nonEmpty) return None
     if (!metadataGroupable) return tryNameSidecar(slice)
     val tag = LwesDataSource.exactTagBounds(new Path(slice.path).getName)
-    val needStats = g > 0 || spec.funcs.exists {
+    val needStats = g > 0 || config.eventNames.nonEmpty || spec.funcs.exists {
       case LwesAggFunc.MinCol(_, true) | LwesAggFunc.MaxCol(_, true) => false
       case _ => true
     }
@@ -280,7 +288,8 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
     val st = if (needStats) {
       val s = LwesStats.read(new Path(slice.path), conf, slice.length,
         manifestHint = slice.hasManifest, sidecarHint = slice.hasStats)
-      if (s.isEmpty) return None // unreadable/stale: stream instead
+      // unreadable/stale, or holding records the gate drops: stream
+      if (!s.exists(pure)) return None
       s
     } else None
     if (g > 0 && st.exists(_.records == 0L)) {
@@ -310,14 +319,16 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
     * sidecar's per-name record counts — "events per type (per day)"
     * with zero opens. Exact only when every function is COUNT(*), the
     * name counts are complete, and they reconcile with the record
-    * total (belt-and-braces against a hand-edited sidecar). */
+    * total (belt-and-braces against a hand-edited sidecar) — and,
+    * under an event-name filter, the file is name-pure. */
   private def tryNameSidecar(slice: LwesInputPartition): Option[Unit] = {
     if (slice.range.nonEmpty || (!slice.hasStats && !slice.hasManifest))
       return None
     if (!funcs.forall(_ == LwesAggFunc.CountStar)) return None
     LwesStats.read(new Path(slice.path), conf, slice.length,
         manifestHint = slice.hasManifest, sidecarHint = slice.hasStats)
-      .filter(st => st.namesComplete && st.names.values.sum == st.records)
+      .filter(st => st.namesComplete && st.names.values.sum == st.records &&
+        pure(st))
       .map { st =>
         mergeNameCounts(slice, st.names)
         metricAcc("filesAggFromStats") += 1
@@ -342,7 +353,8 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
     * MIN/MAX/COUNT(col) included, the slice-grained generalization of
     * the sidecar path. All-or-nothing per slice: every overlapped
     * frame must carry a blob that parses, MATCHES its fixed entry
-    * (record count, raw length), and answers every function, else the
+    * (record count, raw length), is name-pure under an event-name
+    * filter ([[LwesStats.namePure]]), and answers every function, else the
     * whole slice streams (merging nothing first keeps the fallback
     * exact — no double counting). Receipt-backed MIN/MAX use the
     * frame's exact footer bounds: the same stamped-value trust the
@@ -361,7 +373,8 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
       val perFrame = inRange.map { f =>
         if (f.stats == null) None
         else LwesStats.parse(f.stats)
-          .filter(st => st.records == f.records && st.fileLen == f.rawLen)
+          .filter(st => st.records == f.records && st.fileLen == f.rawLen &&
+            pure(st))
           .flatMap { st =>
             val rb = if (f.minReceipt <= f.maxReceipt)
               Some((f.minReceipt, f.maxReceipt)) else None
@@ -389,8 +402,8 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
     * counts (r19), so a name-grouped all-COUNT(*) push over range
     * slices of a fat `.zsj` folds them per frame — "events per type"
     * over one year-long journal with zero decompression. Same
-    * all-or-nothing and blob-integrity rules as the typed frame path,
-    * plus the per-name reconcile check. */
+    * all-or-nothing, blob-integrity and name-purity rules as the typed
+    * frame path, plus the per-name reconcile check. */
   private def tryNameFrameStats(slice: LwesInputPartition): Option[Unit] = {
     if (!funcs.forall(_ == LwesAggFunc.CountStar)) return None
     framesOf(slice).flatMap { frames =>
@@ -399,7 +412,8 @@ class LwesAggPartitionReader(files: Seq[LwesInputPartition],
         if (f.stats == null) None
         else LwesStats.parse(f.stats)
           .filter(st => st.records == f.records && st.fileLen == f.rawLen &&
-            st.namesComplete && st.names.values.sum == st.records)
+            st.namesComplete && st.names.values.sum == st.records &&
+            pure(st))
           .map(_.names)
       }
       if (perFrame.exists(_.isEmpty)) None

@@ -584,9 +584,17 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
     }
     val desc = orders(0).direction() ==
       org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
+    val nullsLast = orders(0).nullOrdering() ==
+      org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_LAST
     col match {
+      // an unmapped receipt column is stamped on every record; one
+      // mapped to `E::ReceiptTime` reads NULL on every other admitted
+      // event, so it needs NULLS LAST like the attribute columns below
+      // (a pruned file's NULL rows then rank after the k bound rows)
       case Some(n) if orders.length == 1 && receiptCols.contains(n) &&
-          fullSchema.fields.exists(f => f.name == n && f.dataType == LongType) =>
+          fullSchema.fields.exists(f => f.name == n && f.dataType == LongType) &&
+          (nullsLast || !LwesOptions.parseMapping(options.get(LwesOptions.Mapping))
+            ._2.contains(n)) =>
         topNSpec = Some(LwesTopN(desc, limit))
         true
       // r19: integral data-attribute columns bound from sidecar zone
@@ -602,16 +610,12 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
       // comes from (value, sidecar record count) units and the prune
       // is exact per file (no bound-straddling rows exist). "ORDER BY
       // day DESC LIMIT k" over a year opens only the newest day.
-      case Some(n) if orders(0).nullOrdering() ==
-            org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_LAST &&
-          samplePartitionCols.contains(n) &&
+      case Some(n) if nullsLast && samplePartitionCols.contains(n) &&
           fullSchema.fields.exists(f =>
             f.name == n && f.dataType == StringType) =>
         topNSpec = Some(LwesTopN(desc, limit, col = Some(n)))
         true
-      case Some(n) if orders(0).nullOrdering() ==
-            org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_LAST &&
-          !samplePartitionCols.contains(n) &&
+      case Some(n) if nullsLast && !samplePartitionCols.contains(n) &&
           !Option(options.get(LwesOptions.EventNameColumn)).contains(n) &&
           !receiptCols.contains(n) &&
           !graft.lwes.LwesEvent.HeaderAttrs.contains(
@@ -751,8 +755,8 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
     if (!gcols.forall(c => fieldByName.get(c).exists(_.dataType == StringType) &&
         (samplePartitionCols.contains(c) || ncolOpt.contains(c)))) return None
     val groupFields = gcols.map(c => fieldByName(c))
-    // footerOnly is finalized in build() (event-name filter and the
-    // explicit receipt-time admission window also gate it); a name-col
+    // footerOnly is finalized in build() (an event-name filter and the
+    // explicit receipt-time admission window clear it); a name-col
     // grouping clears it — footers know record counts, not name splits
     Some(LwesAggSpec(picked.map(_._1).toSeq,
       StructType(groupFields ++ picked.map(_._2)),
@@ -773,11 +777,12 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
     * ARE the answer: a count/min/max/sum dashboard over a year of
     * journals becomes a sidecar wave with zero exchanges. Declines
     * (falling back to the r19 partial push, which is never wrong, only
-    * one exchange heavier) when any option-level record gate exists,
-    * any file lacks readable covering stats, or the manifest-less
-    * candidate count exceeds the driver GET-wave cap. The probe's
-    * stats reads are one GET per directory for manifest-covered files
-    * — the same IO the plan itself will do. */
+    * one exchange heavier) when an ESF template or receipt window gates
+    * records, any file lacks readable covering stats, any file's stats
+    * fail [[LwesStats.namePure]] under an event-name filter, or the
+    * manifest-less candidate count exceeds the driver GET-wave cap.
+    * The probe's stats reads are one GET per directory for
+    * manifest-covered files — the same IO the plan itself will do. */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = {
@@ -791,7 +796,6 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
     val (attrFor, eventFor) = LwesOptions.parseMapping(options.get(LwesOptions.Mapping))
     val eventNames: Set[String] = Option(options.get(LwesOptions.EventName))
       .map(Set(_)).getOrElse(eventFor.values.toSet)
-    if (eventNames.nonEmpty) return false
     if (Option(options.get(LwesOptions.Esf)).nonEmpty) return false
     if (Option(options.get(LwesOptions.ReceiptTimeMin)).nonEmpty ||
         Option(options.get(LwesOptions.ReceiptTimeMax)).nonEmpty) return false
@@ -817,10 +821,13 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
       Option(options.get(LwesOptions.EventNameColumn)).toSet
     val nameGrouped = Option(options.get(LwesOptions.EventNameColumn))
       .exists(spec.groupCols.contains)
+    val colEvents = spec.funcs.flatMap(_.col).flatMap(eventFor.get)
     val ok = withMeta.forall { case (f, hasStats, hasManifest) =>
       val st = LwesStats.read(f.getPath, conf, f.getLen,
         manifestHint = hasManifest, sidecarHint = hasStats)
-      if (st.isEmpty) false // unreadable/stale: that file would stream
+      // unreadable/stale, or records the event-name gate would drop:
+      // that file would stream
+      if (!st.exists(LwesStats.namePure(_, eventNames, colEvents))) false
       else if (nameGrouped)
         // name-grouped: only all-COUNT(*) answers, from per-name counts
         spec.funcs.forall(_ == LwesAggFunc.CountStar) &&
@@ -1074,29 +1081,32 @@ class LwesScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
           .getOrElse(Long.MaxValue)
       else Long.MaxValue
     // the whole-file fast paths (footer index, zone-map sidecars)
-    // survive only when nothing record-level gates admission: an
-    // event-name filter or an explicit receipt-time admission window
-    // forces the streaming fold
-    val aggUngated = eventNames.isEmpty &&
+    // survive only when no receipt-time admission window gates
+    // records. An event-name filter keeps the zone-map paths, which
+    // answer only name-pure files (LwesStats.namePure), but clears the
+    // footer path: a footer knows record counts, not names
+    val aggUngated =
       optLo == Long.MinValue && optHi == Long.MaxValue &&
       timeLo == Long.MinValue && timeHi == Long.MaxValue
     val finalAgg = aggSpec.map(s => s.copy(
-      footerOnly = s.footerOnly && aggUngated, ungated = aggUngated,
+      footerOnly = s.footerOnly && aggUngated && eventNames.isEmpty,
+      ungated = aggUngated,
       // belt-and-braces: complete mode is only ever claimed after the
       // probe, which already declines every gated shape — but a gate
       // appearing here anyway must fall back to the partial push, not
       // serialize a streamed fold through one task
       complete = s.complete && aggUngated &&
         Option(options.get(LwesOptions.Esf)).isEmpty))
-    // A28 soundness gate: the count-based bound needs "every sidecar-
-    // counted record is a result row". Spark's pushdown already
-    // guarantees no data filter sits above the scan; event-name
-    // filters, admission windows, and ESF templates are option-level
-    // gates Spark cannot see, so they clear the spec here (ESF read
-    // defaults don't drop rows, but template validation paths are
-    // conservatively excluded with them).
+    // A28 soundness gate: the count-based bound needs "every counted
+    // record is a result row". Spark's pushdown already guarantees no
+    // data filter sits above the scan; admission windows and ESF
+    // templates are option-level gates Spark cannot see, so they clear
+    // the spec here (ESF read defaults don't drop rows, but template
+    // validation paths are conservatively excluded with them). An
+    // event-name filter keeps the spec: the bound counts only files
+    // whose stats pass LwesStats.namePure, and pruning by it is sound
+    // for any file (a pruned file holds only outranked rows)
     val finalTopN = topNSpec.filter(_ => aggSpec.isEmpty &&
-      eventNames.isEmpty &&
       optLo == Long.MinValue && optHi == Long.MaxValue &&
       timeLo == Long.MinValue && timeHi == Long.MaxValue &&
       Option(options.get(LwesOptions.Esf)).isEmpty)
@@ -1718,26 +1728,6 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
     * files). */
   def topNPrunedFileCount: Long = { plannedPartitions; topNPruned }
 
-  /** A28 bound walk: a greedy lower bound on the k-th result value
-    * (described for DESC; ASC mirrors everywhere with tag/frame MAX
-    * ascending). Each exact-tagged, sidecar-carrying file yields
-    * guaranteed-count UNITS `(bound, count)` — "count result rows with
-    * receipt >= bound": the whole file's sidecar record count at its
-    * tag min, or (for the newest few `.zsj` files) one unit per footer
-    * frame at the frame's exact min, which is what lets "latest k"
-    * over ONE fat journal bound inside the file and decompress only
-    * tail frames. Consume units best-bound-first until the counts
-    * reach k: every counted row's receipt >= its own unit's bound >=
-    * the last bound consumed, so at least k result rows — hence the
-    * k-th-largest — sit at or above it, and any file/frame whose max
-    * is strictly below holds only outranked rows. Files with
-    * unreadable/stale sidecars (or sentinel frame bounds) contribute
-    * no units and are never pruned. Bounded AND lazy: the walk reads
-    * sidecars in 16-file newest-first waves and stops at the first
-    * wave whose counts reach k — the common "latest k" pays one or two
-    * sidecar reads — capped at [[LwesScan.TopNStatsWalkCap]] sidecars
-    * and [[LwesScan.TopNFooterRefine]] footer tails; if the counts
-    * never reach k, no bound, no prune. */
   /** A28 attribute top-N (r19): bound the k-th best value of an
     * integral data-attribute column from sidecar zone maps, then drop
     * files that provably hold only outranked rows. Every sidecar entry
@@ -1787,7 +1777,7 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
     // footer tails are cheap and mostly paid by split planning anyway.
     // Capped at TopNFooterRefine footers like the receipt path.
     val fileUnits = cands.flatMap { case (f, s) =>
-      statsOf(f, s).flatMap(_.attrs.get(attr))
+      statsOf(f, s).filter(unitPure(_, spec)).flatMap(_.attrs.get(attr))
         .filter(e => LwesStats.integralFits(e, dt) && e.count > 0)
         .map(e => (f, s, if (spec.desc) e.minL else e.maxL,
           if (spec.desc) e.maxL else e.minL, e.count))
@@ -1911,7 +1901,8 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
       var j = 0
       while (j < chunk.length && bound == null) {
         val (f, s, v) = chunk(j)
-        statsOf(f, s).filter(_.records > 0).foreach { st =>
+        statsOf(f, s).filter(st => st.records > 0 && unitPure(st, spec))
+            .foreach { st =>
           taken += st.records
           if (taken >= spec.k) bound = v
         }
@@ -1967,7 +1958,7 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
     val cmp = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
     val units = mutable.ArrayBuffer.empty[(Double, Long)] // (weak bound, count)
     val fileUnits = cands.flatMap { case (f, s) =>
-      statsOf(f, s).flatMap(_.attrs.get(attr))
+      statsOf(f, s).filter(unitPure(_, spec)).flatMap(_.attrs.get(attr))
         .filter(e => dblFits(e, dt) && e.count > 0)
         .map(e => (f, s, if (spec.desc) e.minD else e.maxD,
           if (spec.desc) e.maxD else e.minD, e.count))
@@ -2086,7 +2077,8 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
       else None
     val units = mutable.ArrayBuffer.empty[(Array[Byte], Long)]
     val fileUnits = cands.flatMap { case (f, s) =>
-      statsOf(f, s).flatMap(_.attrs.get(attr)).flatMap(unitOf)
+      statsOf(f, s).filter(unitPure(_, spec)).flatMap(_.attrs.get(attr))
+        .flatMap(unitOf)
         .map { case (b, n) => (f, s, b, n) }
     }
     // frame refinement for fat .zsj candidates, best-file-bound first
@@ -2169,6 +2161,38 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
   private val byteOrdering: Ordering[Array[Byte]] =
     (a: Array[Byte], b: Array[Byte]) => LwesStats.cmpB(a, b)
 
+  /** A file's stats yield top-N bound units only when they prove every
+    * counted record is a row of this scan with a value in the sort
+    * column: [[LwesStats.namePure]] over that column (the receipt path
+    * has no `col` and checks every receipt-backed column). Frames of a
+    * pure file are pure. Only the bound needs this — a file the bound
+    * prunes holds nothing but outranked rows, admitted or not. */
+  private def unitPure(st: LwesStats.FileStats, spec: LwesTopN): Boolean =
+    config.namePure(st, spec.col.map(Seq(_)).getOrElse(
+      config.schema.fieldNames.toSeq.filter(c =>
+        config.attrOf(c) == LwesEvent.ReceiptTime)))
+
+  /** A28 bound walk: a greedy lower bound on the k-th result value
+    * (described for DESC; ASC mirrors everywhere with tag/frame MAX
+    * ascending). Each exact-tagged, sidecar-carrying file yields
+    * guaranteed-count UNITS `(bound, count)` — "count result rows with
+    * receipt >= bound": the whole file's sidecar record count at its
+    * tag min, or (for the newest few `.zsj` files) one unit per footer
+    * frame at the frame's exact min, which is what lets "latest k"
+    * over ONE fat journal bound inside the file and decompress only
+    * tail frames. Consume units best-bound-first until the counts
+    * reach k: every counted row's receipt >= its own unit's bound >=
+    * the last bound consumed, so at least k result rows — hence the
+    * k-th-largest — sit at or above it, and any file/frame whose max
+    * is strictly below holds only outranked rows. Files with
+    * unreadable/stale sidecars (or sentinel frame bounds), and under
+    * an event-name filter files not proven name-pure, contribute no
+    * units. Bounded AND lazy: the walk reads sidecars in 16-file
+    * newest-first waves and stops at the first wave whose counts reach
+    * k — the common "latest k" pays one or two sidecar reads — capped
+    * at [[LwesScan.TopNStatsWalkCap]] sidecars and
+    * [[LwesScan.TopNFooterRefine]] footer tails; if the counts never
+    * reach k, no bound, no prune. */
   private def topNBound(
       slices: Array[(FileStatus, LwesInputPartition)],
       spec: LwesTopN, conf: Configuration): Option[Long] = {
@@ -2189,20 +2213,26 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
     // inside the FIRST chunk, TopNFooterRefine < chunk size) — it can
     // never enter the greedy best-first prefix that sets the bound.
     val units = mutable.ArrayBuffer.empty[(Long, Long)] // (bound, count)
+    // under an event-name filter a file's units (sidecar or footer
+    // frames) count only when its sidecar proves it name-pure
+    val gated = config.eventNames.nonEmpty
     var acc = 0L
     var i = 0
     while (i < walk.length && acc < spec.k) {
       val chunk = walk.slice(i, math.min(i + 16, walk.length))
       // sidecar wave only for files whose unit comes from the sidecar
-      // (footer-refined files read the footer instead; if that read
-      // fails, the per-file computeIfAbsent below falls back)
+      // or whose purity it proves (footer-refined files read the footer
+      // instead; if that read fails, the per-file computeIfAbsent below
+      // falls back)
       prefetchStats(chunk.zipWithIndex.collect {
         case ((f, s, _, _), j)
-            if !(i + j < LwesScan.TopNFooterRefine &&
+            if gated || !(i + j < LwesScan.TopNFooterRefine &&
               graft.lwes.SplitJournal.isSplit(s.path)) => (f, s)
       }.toSeq, conf)
       chunk.zipWithIndex.foreach { case ((f, s, mn, mx), j) =>
-        val framed =
+        lazy val st = statsCache.computeIfAbsent(statsKey(f, s),
+          _ => readSidecarOf(s, conf))
+        val framed = (!gated || st.exists(unitPure(_, spec))) &&
           i + j < LwesScan.TopNFooterRefine &&
             graft.lwes.SplitJournal.isSplit(s.path) &&
             (footerCache.computeIfAbsent(footerKey(f, s),
@@ -2219,11 +2249,10 @@ class LwesScan(schema: StructType, val config: LwesReadConfig,
               case None => false
             })
         if (!framed)
-          statsCache.computeIfAbsent(statsKey(f, s), _ => readSidecarOf(s, conf))
-            .foreach { st =>
-              units += ((if (spec.desc) mn else mx, st.records))
-              acc += st.records
-            }
+          st.filter(unitPure(_, spec)).foreach { x =>
+            units += ((if (spec.desc) mn else mx, x.records))
+            acc += x.records
+          }
       }
       i += chunk.length
     }
@@ -2454,16 +2483,17 @@ object LwesScan {
 
   /** Every [[LwesScan]] in a physical plan, descending through AQE
     * wrappers (adaptive root, query stages — whose `children` is
-    * empty) and subqueries. The one traversal shared by gates and
-    * specs that assert on a scan's post-execution state (e.g. the
-    * runtime-pruned file count under DPP). */
+    * empty) and subqueries. Batch and micro-batch scan nodes both
+    * count. The one traversal shared by gates and specs that assert on
+    * a scan's post-execution state (e.g. the runtime-pruned file count
+    * under DPP). */
   def scansIn(plan: org.apache.spark.sql.execution.SparkPlan): Seq[LwesScan] = {
     val self = plan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         scansIn(a.executedPlan)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         scansIn(q.plan)
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+      case b: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase =>
         b.scan match {
           case s: LwesScan => Seq(s)
           case _ => Nil
@@ -2478,7 +2508,7 @@ object LwesScan {
     * metrics (eventsParsed/eventsSkipped/rowsFiltered/...), for gates
     * and specs that assert the parser actually did the pushed work
     * (e.g. a nonzero rowsFiltered under attribute-predicate
-    * pushdown). */
+    * pushdown). Batch and micro-batch scan nodes both count. */
   def scanMetricSum(plan: org.apache.spark.sql.execution.SparkPlan,
       name: String): Long = {
     val self = plan match {
@@ -2486,7 +2516,7 @@ object LwesScan {
         scanMetricSum(a.executedPlan, name)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         scanMetricSum(q.plan, name)
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+      case b: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
           if b.scan.isInstanceOf[LwesScan] =>
         b.metrics.get(name).map(_.value).getOrElse(0L)
       case _ => 0L

@@ -42,6 +42,11 @@ final case class LwesReadConfig(
   extends Serializable {
 
   def attrOf(col: String): String = attrFor.getOrElse(col, col)
+
+  /** [[LwesStats.namePure]] for this scan's gate, over an answer that
+    * reads `cols`. */
+  def namePure(st: LwesStats.FileStats, cols: Iterable[String]): Boolean =
+    LwesStats.namePure(st, eventNames, cols.flatMap(eventFor.get))
 }
 
 /** One aggregate function pushed into the scan (A26). `col` names a
@@ -97,12 +102,14 @@ object LwesAggFunc {
   * a usable footer (gzip journals, torn `.zsj`) always fall back to the
   * streaming count, so the fast path never changes results.
   *
-  * `ungated` = nothing record-level gates admission (no event-name
-  * filter, no receipt-time window; finalized in `build()`): the
-  * precondition BOTH whole-file fast paths share — `footerOnly` adds
-  * "every function is footer-answerable" on top, and the A27 zone-map
-  * answer path (per-file, any codec, attribute MIN/MAX/COUNT too)
-  * checks exactness per sidecar instead. */
+  * `ungated` = no receipt-time window gates admission (finalized in
+  * `build()`): the precondition BOTH whole-file fast paths share.
+  * `footerOnly` adds "every function is footer-answerable" and "no
+  * event-name filter" on top (a footer knows record counts, not
+  * names); the A27 zone-map answer path (per-file, any codec,
+  * attribute MIN/MAX/COUNT too) checks exactness per sidecar instead,
+  * and under an event-name filter answers only files and frames whose
+  * stats prove every record admitted ([[LwesStats.namePure]]). */
 final case class LwesAggSpec(funcs: Seq[LwesAggFunc], schema: StructType,
     footerOnly: Boolean, ungated: Boolean = true,
     // r20: COMPLETE pushdown — a plan-time probe proved every listed
@@ -134,13 +141,16 @@ final case class LwesAggSpec(funcs: Seq[LwesAggFunc], schema: StructType,
   * semantics. Accepted for a single-column sort on a gate-free scan
   * (no pushed/residual filters — Spark's pushdown only offers top-N
   * when Sort+Limit sit directly over the relation — and `build()`
-  * clears the spec under event-name filters, admission windows, or
-  * ESF templates), so every record the metadata counts is a result
+  * clears the spec under admission windows or ESF templates). Under
+  * an event-name filter only name-pure files ([[LwesStats.namePure]])
+  * feed the bound, so every record the metadata counts is a result
   * row. Two column classes:
   *   - `col = None`: a LongType ReceiptTime header column — bounds
   *     from exact `.t` name tags + `.zsj` footer frame bounds (the
-  *     r18 path; null ordering is irrelevant, the header is stamped
-  *     on every record);
+  *     r18 path; null ordering is irrelevant for an unmapped column,
+  *     the header is stamped on every record, but a column mapped to
+  *     `E::ReceiptTime` reads NULL on other admitted events and so
+  *     requires NULLS LAST);
   *   - `col = Some(c)` (r19): an INTEGRAL data-attribute column —
   *     bounds from the A27 sidecar min/max + non-null counts, under
   *     the integral type-fit rule. Requires NULLS LAST (Spark's
@@ -201,10 +211,12 @@ object LwesOptions {
   // streaming sink promotes/reaps it with the pending journal at epoch
   // commit). Read side (`statsPrune`, default true): pushed attribute
   // predicates drop whole files whose sidecar proves no record can
-  // match — before any open or decompress; ungated pushed AGGREGATES
-  // are answered per file from the sidecar alone (A26×A27). Sound by
-  // construction (see LwesStats); missing/stale/foreign sidecars simply
-  // keep the file / stream the fold.
+  // match — before any open or decompress; pushed AGGREGATES are
+  // answered per file from the sidecar alone (A26×A27), under an
+  // event-name filter only for files whose per-name counts prove every
+  // record admitted (LwesStats.namePure). Sound by construction (see
+  // LwesStats); missing/stale/foreign sidecars simply keep the file /
+  // stream the fold.
   val WriteStats = "writeStats"
   val StatsPrune = "statsPrune"
   // zone-map prune placement cap (default 8192): up to this many
@@ -239,8 +251,9 @@ object LwesOptions {
   // outside the bound cannot contribute (A28; "latest k events" over a
   // year of journals opens the newest few files instead of the year).
   // Untagged or sidecar-less files are never pruned and never feed the
-  // bound; Spark keeps the global Sort+Limit, so pruning is the only
-  // effect. Escape hatch only.
+  // bound, and under `eventName` only name-pure files feed it; Spark
+  // keeps the global Sort+Limit, so pruning is the only effect. Escape
+  // hatch only.
   val TopNPrune = "topNPrune"
   // storage-partitioned joins (A29). "auto" (default): when Spark's
   // `spark.sql.sources.v2.bucketing.enabled` is on, a partitioned

@@ -311,6 +311,25 @@ object LwesStats {
       complete: Boolean, attrs: Map[String, AttrStats],
       names: Map[String, Long] = Map.empty, namesComplete: Boolean = false)
 
+  /** Name purity — the ONE rule every metadata answer (sidecar and
+    * frame-blob aggregates, complete pushdown, top-N bound units)
+    * applies under an event-name gate: true ⇔ every record these stats
+    * counted is a row of the scan, so record counts and attribute stats
+    * speak for the gated scan exactly as for an ungated one. Holds when
+    * the scan has no gate (`eventNames` empty), when there are no
+    * records, or when the per-name counts are complete, reconcile with
+    * the record total, and name only admitted events — and then each
+    * `colEvents` entry (the `Event::Name` mapping of a column the answer
+    * reads) must be the file's ONLY name: a mapped column reads NULL on
+    * records of any other name, which shared per-attribute stats cannot
+    * express. */
+  def namePure(st: FileStats, eventNames: Set[String],
+      colEvents: Iterable[String]): Boolean =
+    eventNames.isEmpty || st.records == 0L || (
+      st.namesComplete && st.names.values.sum == st.records &&
+        st.names.keySet.subsetOf(eventNames) &&
+        colEvents.forall(e => st.names.keySet == Set(e)))
+
   // ---------------------------------------------------------- tracker
 
   private final class Mut {
@@ -770,8 +789,8 @@ object LwesStats {
     * (partition values, the event-name column) and header pseudo-attrs
     * are rejected here too — their null semantics differ from "attr
     * absent". The CALLER gates record-level admission (event-name
-    * filters, receipt windows, ESF defaults, ranged slices): this
-    * function assumes the whole file is admitted as-is. */
+    * filters via [[namePure]], receipt windows, ESF defaults, ranged
+    * slices): this function assumes the whole file is admitted as-is. */
   def answerAggregates(stats: Option[FileStats],
       receiptBounds: Option[(Long, Long)], funcs: Seq[LwesAggFunc],
       attrOf: String => String, typeOf: String => Option[DataType],

@@ -86,4 +86,28 @@ class LwesFunctionsSpec extends AnyFunSuite {
       sqlRow.getString(5) == "stra\u00dfe ab")
     assert(sqlRow.getString(6) == api.getString(6))
   }
+
+  /** The error condition analysis raised for `df`, or fails the test. */
+  private def analysisCondition(df: => org.apache.spark.sql.DataFrame): String =
+    intercept[org.apache.spark.sql.AnalysisException](df.queryExecution.assertAnalyzed())
+      .getCondition
+
+  test("round_half_up rejects a non-double child at analysis time") {
+    val df = Seq((1L, 2.5)).toDF("n", "d")
+    assert(df.select(SignatureExpressions.round_half_up($"d", 0)).head.getDouble(0) == 3.0)
+    assert(analysisCondition(df.select(SignatureExpressions.round_half_up($"n", 2))) ==
+      "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
+  }
+
+  test("band_signatures rejects a non-array<long> child and bands/r below 1") {
+    val df = Seq((Seq(1L, 2L, 3L, 4L), Seq(1, 2, 3, 4))).toDF("mh", "ints")
+    assert(df.select(SignatureExpressions.band_signatures($"mh", 2, 2))
+      .head.getSeq[Long](0).length == 2)
+    assert(analysisCondition(df.select(SignatureExpressions.band_signatures($"ints", 2, 2))) ==
+      "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
+    Seq((0, 2), (2, 0), (-1, 4)).foreach { case (b, r) =>
+      assert(analysisCondition(df.select(SignatureExpressions.band_signatures($"mh", b, r))) ==
+        "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", s"bands=$b r=$r")
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.lwes.{JournalWriter, LwesEvent, SplitJournalWriter}
-import graft.sources.lwes.LwesScan
+import graft.sources.lwes.{LwesOptions, LwesScan}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -52,8 +52,10 @@ class LwesAggPushdownSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def parsed(df: DataFrame): Long =
-    LwesScan.scanMetricSum(df.queryExecution.executedPlan, "eventsParsed")
+  private def metric(df: DataFrame, name: String): Long =
+    LwesScan.scanMetricSum(df.queryExecution.executedPlan, name)
+
+  private def parsed(df: DataFrame): Long = metric(df, "eventsParsed")
 
   test("COUNT(*) over .zsj is answered from footers: zero events parsed") {
     val dir = tmp()
@@ -558,5 +560,123 @@ class LwesAggPushdownSpec extends AnyFunSuite {
     assert(rows == Map("0" -> ((150L, 0L)), "1" -> ((150L, 1L))))
     assert(plan(q).contains("groupBy=[dt]"), plan(q))
     assert(parsed(q) == 300L) // no sidecar, no footer: streamed fold
+  }
+
+  // ---------------------------- name-pure soundness matrix (aggregates)
+
+  private val Gate = "eventName" -> "Np::E"
+
+  /** One journal via the DSv2 writer (sidecar, `.t` tag, manifest):
+    * ids [base, base+n), receipts T0+id, event name `name(id)`. */
+  private def writeNamed(dir: String, base: Int, n: Int,
+      name: Int => String = _ => "Np::E", compression: String = "split-zstd"): Unit = {
+    import spark.implicits._
+    (base until base + n).map(i => (i.toLong, T0 + i, s"pg/${i % 7}", name(i)))
+      .toDF("id", "ReceiptTime", "page", "ev").repartition(1)
+      .write.format("lwes").option("eventNameColumn", "ev")
+      .option(LwesOptions.Compression, compression).mode("append").save(dir)
+  }
+
+  private def rdNamed(dir: String, schema: String,
+      extra: Seq[(String, String)]): DataFrame = {
+    val base = spark.read.format("lwes").schema(schema)
+    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load(dir)
+  }
+
+  /** `q(extra)` after asserting its rows equal `q(extra + aggPushdown=false)`. */
+  private def parityAgg(q: Seq[(String, String)] => DataFrame,
+      extra: (String, String)*): DataFrame = {
+    val pushed = q(extra)
+    val rows = pushed.collect().toSeq
+    val plain = q(extra :+ (LwesOptions.AggPushdown -> "false")).collect().toSeq
+    assert(rows == plain, s"pushed $rows != unpushed $plain")
+    pushed
+  }
+
+  private val namedSchema = "id long, ReceiptTime long, page string"
+  private def countMinMax(d: DataFrame): DataFrame = d.agg(count(lit(1)).as("n"),
+    min(col("ReceiptTime")).as("mn_rt"), max(col("ReceiptTime")).as("mx_rt"),
+    min(col("id")).as("mn"), max(col("id")).as("mx"), min(col("page")).as("mn_pg"))
+  private def receiptBounds(d: DataFrame): DataFrame = d.agg(
+    min(col("ReceiptTime")).as("mn_rt"), max(col("ReceiptTime")).as("mx_rt"))
+  private val partial = LwesOptions.CompleteAggPushdown -> "false"
+
+  test("name-pure: eventName-scoped COUNT/MIN/MAX plans complete, parses nothing") {
+    val dir = tmp()
+    (0 until 3).foreach(p => writeNamed(dir, p * 100, 100))
+    val q = parityAgg(o => countMinMax(rdNamed(dir, namedSchema, o)), Gate)
+    assert(plan(q).contains(" complete"), plan(q))
+    assert(parsed(q) == 0L)
+    val r = q.collect().head
+    assert(r.getLong(0) == 300L && r.getLong(2) == T0 + 299 &&
+      r.getLong(3) == 0L && r.getLong(4) == 299L)
+    // the partial push answers every file from its sidecar, receipt-only
+    // bounds included (their stats read is what proves purity)
+    Seq(countMinMax _, receiptBounds _).foreach { agg =>
+      val p = parityAgg(o => agg(rdNamed(dir, namedSchema, o)), Gate, partial)
+      assert(metric(p, "filesAggFromStats") == 3L && parsed(p) == 0L, plan(p))
+    }
+  }
+
+  test("name-pure: a mixed-name file streams beside a pure one, same answers") {
+    val dir = tmp()
+    writeNamed(dir, 0, 100)
+    // odd ids are Np::O: the file's count, id and receipt maxima all
+    // differ from what its admitted Np::E records read
+    writeNamed(dir, 100, 100, i => if (i % 2 == 0) "Np::E" else "Np::O")
+    Seq(countMinMax _, receiptBounds _).foreach { agg =>
+      val p = parityAgg(o => agg(rdNamed(dir, namedSchema, o)), Gate, partial)
+      assert(metric(p, "filesAggFromStats") == 1L, plan(p))
+      assert(metric(p, "framesAggFromStats") == 0L && parsed(p) == 50L, plan(p))
+      val c = parityAgg(o => agg(rdNamed(dir, namedSchema, o)), Gate)
+      assert(!plan(c).contains(" complete"), plan(c))
+    }
+    assert(parityAgg(o => countMinMax(rdNamed(dir, namedSchema, o)), Gate)
+      .collect().head.getLong(2) == T0 + 198)
+  }
+
+  test("name-pure: a sidecar without nc= falls back to the stream") {
+    val dir = tmp()
+    (0 until 2).foreach(p => writeNamed(dir, p * 100, 100, compression = "gzip"))
+    SidecarFixtures.stripNamesComplete(dir)
+    val q = parityAgg(o => countMinMax(rdNamed(dir, namedSchema, o)), Gate)
+    assert(!plan(q).contains(" complete"), plan(q))
+    assert(metric(q, "filesAggFromStats") == 0L && parsed(q) == 200L)
+    // the same files answer from their sidecars without the gate
+    val u = parityAgg(o => countMinMax(rdNamed(dir, namedSchema, o)), partial)
+    assert(metric(u, "filesAggFromStats") == 2L && parsed(u) == 0L)
+  }
+
+  test("name-pure: a column mapped to another event reads NULL, not attr stats") {
+    val dir = tmp()
+    (0 until 2).foreach(p => writeNamed(dir, p * 100, 100))
+    def agg(d: DataFrame) = d.agg(count(lit(1)).as("n"),
+      min(col("x")).as("mn"), max(col("x")).as("mx"), count(col("x")).as("nx"))
+    def q(event: String)(o: Seq[(String, String)]) =
+      agg(rdNamed(dir, "x long", o :+ ("mapping" -> s"x:$event::id")))
+    val other = parityAgg(q("Np::O"), Gate)
+    val r = other.collect().head
+    assert(r.getLong(0) == 200L && r.isNullAt(1) && r.isNullAt(2) &&
+      r.getLong(3) == 0L, s"$r")
+    assert(!plan(other).contains(" complete") &&
+      metric(other, "filesAggFromStats") == 0L, plan(other))
+    // mapped to the files' only name, the sidecars answer
+    val same = parityAgg(q("Np::E"), Gate)
+    assert(plan(same).contains(" complete") && parsed(same) == 0L, plan(same))
+    assert(same.collect().head.getLong(2) == 199L)
+  }
+
+  test("name-pure: eventName-filtered GROUP BY event-name column counts from sidecars") {
+    val dir = tmp()
+    (0 until 2).foreach(p => writeNamed(dir, p * 100, 100))
+    def q(o: Seq[(String, String)]) =
+      rdNamed(dir, "id long, ev string", o :+ ("eventNameColumn" -> "ev"))
+        .groupBy(col("ev")).agg(count(lit(1)).as("n"))
+    val g = parityAgg(q, Gate)
+    assert(g.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("Np::E", 200L)))
+    assert(plan(g).contains("groupBy=[ev]") && parsed(g) == 0L, plan(g))
+    val p = parityAgg(q, Gate, partial)
+    assert(metric(p, "filesAggFromStats") == 2L && parsed(p) == 0L, plan(p))
   }
 }

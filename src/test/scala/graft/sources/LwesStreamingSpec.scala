@@ -429,10 +429,7 @@ class LwesStreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
         .streamingQuery.lastExecution.executedPlan
       assert(plan.toString.contains("ColumnarToRow"), plan.toString)
-      val torn = plan.collect {
-        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec =>
-          m.metrics("tornFiles").value
-      }.sum
+      val torn = graft.sources.lwes.LwesScan.scanMetricSum(plan, "tornFiles")
       assert(torn == 1L, s"tornFiles = $torn")
     } finally q.stop()
   }

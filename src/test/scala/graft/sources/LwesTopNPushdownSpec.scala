@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.lwes.{LwesOptions, LwesScan}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -153,13 +153,137 @@ class LwesTopNPushdownSpec extends AnyFunSuite {
   }
 
   test("an event-name filter clears the push in build()") {
+    // the journals are single-name Tn::E with sidecars: name-pure, so
+    // the push survives the gate and the older file prunes
     val dir = tmp()
     writeRanged(dir, Seq((0L, 100), (1000L, 100)))
-    val d = rd(dir, "eventName" -> "Tn::E")
-      .orderBy(col("ReceiptTime").desc).limit(10)
-    assert(d.collect().map(_.getLong(0)).max == 1099L)
-    assert(LwesScan.scansIn(d.queryExecution.executedPlan)
-      .map(_.topNPrunedFileCount).sum == 0L)
+    val (pruned, vals) = parity(dir, 10, desc = true, "eventName" -> "Tn::E")
+    assert(vals.max == 1099L)
+    assert(pruned > 0L, s"name-pure files should prune ($pruned)")
+  }
+
+  /** One journal of `n` records with receipts [base, base+n) whose
+    * event names come from `nameOf(i)` (mixed-name when it varies). */
+  private def writeNamed(dir: String, base: Long, n: Int,
+      nameOf: Int => String): Unit = {
+    import spark.implicits._
+    (0 until n).map(i => (base + i, (base + i) % 97, nameOf(i)))
+      .toDF("ReceiptTime", "user_id", "ev").repartition(1)
+      .write.format("lwes").option("eventNameColumn", "ev")
+      .mode("append").save(dir)
+  }
+
+  test("an event-name filter over mixed-name files prunes nothing") {
+    val dir = tmp()
+    (0 until 2).foreach(p => writeNamed(dir, p * 1000L, 100,
+      i => if (i % 2 == 0) "Tn::E" else "Tn::O"))
+    val (pruned, vals) = parity(dir, 10, desc = true, "eventName" -> "Tn::E")
+    assert(vals.max == 1098L && vals.length == 10)
+    assert(pruned == 0L, s"mixed-name files must not feed the bound ($pruned)")
+  }
+
+  // ------------------------------ name-pure soundness matrix (top-N)
+
+  test("name-pure: eventName-scoped receipt, integral, string, double and " +
+      "partition top-k prune") {
+    val rdir = tmp()
+    writeRanged(rdir, Seq((0L, 100), (1000L, 100), (2000L, 100)))
+    val (rp, rv) = parity(rdir, 50, desc = true, "eventName" -> "Tn::E")
+    assert(rp > 0L && rv.max == 2099L, s"receipt: pruned $rp")
+    /** pruned-file count of `q(gated opts)`, after value parity with
+      * the same gated query under topNPrune=false */
+    def check(q: Seq[(String, String)] => DataFrame, name: String): Long = {
+      val d = q(Seq("eventName" -> name))
+      val got = d.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+      val want = q(Seq("eventName" -> name, LwesOptions.TopNPrune -> "false"))
+        .collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+      assert(got.sorted.sameElements(want.sorted), s"$name: $got vs $want")
+      LwesScan.scansIn(d.queryExecution.executedPlan)
+        .map(_.topNPrunedFileCount).sum
+    }
+    val idir = tmp()
+    writeScored(idir)
+    assert(check(o => rdScored(idir, o: _*).orderBy(col("score").desc)
+      .limit(5), "Ts::E") > 0L, "integral")
+    val sdir = tmp()
+    writeTagged(sdir)
+    assert(check(o => rdTagged(sdir, o: _*).orderBy(col("tag").desc)
+      .limit(5), "Ts::S") > 0L, "string")
+    val ddir = tmp()
+    writeFpScored(ddir)
+    assert(check(o => rdFpScored(ddir, "double", o: _*)
+      .orderBy(col("score").desc).limit(5), "Fs::E") > 0L,
+      "double")
+    import spark.implicits._
+    val pdir = tmp()
+    Seq("d0", "d1", "d2").zipWithIndex.foreach { case (d, p) =>
+      (p * 100 until p * 100 + 100).map(i => (i.toLong, d))
+        .toDF("id", "dt").repartition(1)
+        .write.format("lwes").option("eventName", "Pt::E")
+        .option("partitionBy", "dt").mode("append").save(pdir)
+    }
+    assert(check(o => o.foldLeft(spark.read.format("lwes")
+        .schema("id long, dt string")) { case (r, (k, v)) => r.option(k, v) }
+      .load(pdir).orderBy(col("dt").desc, col("id")).limit(20), "Pt::E") > 0L,
+      "partition column")
+  }
+
+  test("name-pure: a mixed-name file adds no top-N unit") {
+    val dir = tmp()
+    writeRanged(dir, Seq((0L, 100), (1000L, 100)))
+    // newest file: 100 records, only 5 of them Tn::E — its 100-record
+    // sidecar unit must not close k=10 and prune the pure [1000,1100)
+    writeNamed(dir, 2000L, 100, i => if (i % 20 == 0) "Tn::E" else "Tn::O")
+    val (pruned, vals) = parity(dir, 10, desc = true, "eventName" -> "Tn::E")
+    assert(vals.length == 10 && vals.count(_ >= 2000L) == 5)
+    assert(pruned == 1L, s"only the [0,100) file is outranked ($pruned)")
+  }
+
+  test("name-pure: a sidecar without nc= feeds no top-N unit") {
+    val dir = tmp()
+    writeRanged(dir, Seq((0L, 100), (1000L, 100)))
+    SidecarFixtures.stripNamesComplete(dir)
+    val (pruned, vals) = parity(dir, 10, desc = true, "eventName" -> "Tn::E")
+    assert(vals.max == 1099L)
+    assert(pruned == 0L, s"unproven names must not feed the bound ($pruned)")
+    // the edited sidecars still read: without the gate they bound
+    assert(parity(dir, 10, desc = true)._1 > 0L)
+  }
+
+  test("name-pure: a receipt column mapped to one event needs NULLS LAST") {
+    // the gate admits Tm::A and Tm::B; rt reads Tm::A's receipt and is
+    // NULL on every Tm::B record. Tm::A-only files are pure for rt and
+    // bound k, but a Tm::B-only or mixed file past that bound holds
+    // NULL rows, which NULLS FIRST ranks ahead of every receipt
+    val dir = tmp()
+    writeRanged(dir, Seq((0L, 100), (1000L, 100)), "eventName" -> "Tm::A")
+    writeRanged(dir, Seq((2000L, 100)), "eventName" -> "Tm::B")
+    writeNamed(dir, 3000L, 100, i => if (i % 2 == 0) "Tm::A" else "Tm::B")
+    def run(order: Column, opts: (String, String)*): (Seq[Option[Long]], Long) = {
+      val d = (opts :+ ("mapping" -> "rt:Tm::A::ReceiptTime,u:Tm::B::user_id"))
+        .foldLeft(spark.read.format("lwes").schema("rt long, u long")) {
+          case (r, (k, v)) => r.option(k, v) }
+        .load(dir).orderBy(order).limit(10).select("rt")
+      val vals = d.collect().toSeq.map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      (vals.sorted, LwesScan.scansIn(d.queryExecution.executedPlan)
+        .map(_.topNPrunedFileCount).sum)
+    }
+    def parityOf(order: Column): (Seq[Option[Long]], Long) = {
+      val (got, pruned) = run(order)
+      val (want, _) = run(order, LwesOptions.TopNPrune -> "false")
+      assert(got == want, s"$order: pruned $got vs unpruned $want")
+      (got, pruned)
+    }
+    Seq(col("rt").asc, col("rt").desc_nulls_first).foreach { o =>
+      val (vals, pruned) = parityOf(o)
+      assert(vals.forall(_.isEmpty) && pruned == 0L, s"$o: $vals, pruned $pruned")
+    }
+    val (asc, ascPruned) = parityOf(col("rt").asc_nulls_last)
+    assert(asc == (0L until 10L).map(Some(_)) && ascPruned == 3L,
+      s"asc nulls last: $asc, pruned $ascPruned")
+    val (desc, descPruned) = parityOf(col("rt").desc)
+    assert(desc == (3080L until 3100L by 2).map(Some(_)) && descPruned == 1L,
+      s"desc: $desc, pruned $descPruned")
   }
 
   test("k beyond the directory keeps everything") {
@@ -280,8 +404,8 @@ class LwesTopNPushdownSpec extends AnyFunSuite {
 
   private def rdFpScored(dir: String, st: String,
       extra: (String, String)*): DataFrame = {
-    // no eventName filter: build() clears the top-N push under any
-    // record gate, and these journals are single-event anyway
+    // no eventName filter: these journals are single-event anyway
+    // (the gated reads are in the name-pure matrix)
     val base = spark.read.format("lwes").schema(s"id long, score $st")
     extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load(dir)
   }
@@ -519,7 +643,7 @@ class LwesTopNPushdownSpec extends AnyFunSuite {
   }
 
   private def rdTagged(dir: String, extra: (String, String)*): DataFrame = {
-    // no eventName option: a name gate clears the top-N spec in build()
+    // no eventName option (the gated reads are in the name-pure matrix)
     val base = spark.read.format("lwes").schema("id long, tag string")
     extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load(dir)
   }

@@ -219,15 +219,10 @@ class LwesColumnarSpec extends AnyFunSuite {
         .setIpAddr("ip", Array(10, 0, (id % 200).toByte, 1))
         .setInt64(LwesEvent.ReceiptTime, 1700000000000L + id)
       if (id % 5 != 0) ev.setString("opt", s"v$id")
-      val payload = LwesCodec.serialize(ev)
-      val framed = new Array[Byte](payload.length + 4)
-      framed(0) = (payload.length >>> 24).toByte
-      framed(1) = (payload.length >>> 16).toByte
-      framed(2) = (payload.length >>> 8).toByte
-      framed(3) = payload.length.toByte
-      System.arraycopy(payload, 0, framed, 4, payload.length)
+      // BytesWritable writes the 4-byte length prefix itself: the
+      // value is the bare serialized event (EventWritable's layout)
       writers(id % 3).append(new LongWritable(id.toLong),
-        new BytesWritable(framed))
+        new BytesWritable(LwesCodec.serialize(ev)))
     }
     writers.foreach(_.close())
     val df = spark.read.format("lwes").schema(schemaDdl)
@@ -235,9 +230,16 @@ class LwesColumnarSpec extends AnyFunSuite {
     val a = df.orderBy("id").collect()
     val b = reference(df)
     assert(a.length == 300 && a.sameElements(b))
-    // SEQ has no journal frame header, and header-mapped columns are
-    // header-derived in both decodes -> NULL for SEQ
-    assert(a(5).isNullAt(10) && b(5).isNullAt(10))
+    // real values, not all-NULL rows: id 7 -> Col::B, opt present
+    val r = a(7)
+    assert(r.getLong(0) == 7L && r.getInt(1) == 21 && r.getShort(2) == 7 &&
+      r.getInt(3) == 7 && r.getLong(4) == 49L && !r.getBoolean(6))
+    assert(r.getDecimal(5).toString == (BigInt(2).pow(64) - 8).toString)
+    assert(r.getDouble(7) == 1.75 && r.getString(8) == "10.0.7.1" &&
+      r.getString(9) == "v7")
+    // SEQ has no journal frame header: records keep the ReceiptTime
+    // their payload carries, in both decodes
+    assert(a(5).getLong(10) == 1700000000005L && b(5).getLong(10) == 1700000000005L)
     // sometimes-missing attr is null in both
     assert(a(0).isNullAt(9) && b(0).isNullAt(9))
     // eventName filter applies on the wire bytes
